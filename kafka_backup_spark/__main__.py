@@ -21,7 +21,8 @@ import sys
 from kafka_backup_spark import config as cfgmod
 from kafka_backup_spark import manifest as mani
 from kafka_backup_spark.engine import BackupEngine, RestoreConfig, RestoreEngine
-from kafka_backup_spark.manifest_store import ManifestStore
+from kafka_backup_spark.manifest_store import ManifestStore, doc_to_manifest
+from kafka_backup_spark.schema import local_frame
 from kafka_backup_spark.session import get_spark
 from kafka_backup_spark.sources.segments import SegmentStore
 from kafka_backup_spark.storage_path import store_from_path
@@ -133,24 +134,24 @@ def cmd_validate(args, doc) -> int:
     spark = get_spark("cli-validate")
     from kafka_backup_spark.validation.checks import integrity_scan, validation_summary
 
-    mstore = ManifestStore(args.store, args.backup_id)
-    m = mstore.load(spark)
-    if m is None:
+    docjson = ManifestStore(args.store, args.backup_id).load_doc()
+    if docjson is None:
         print("no manifest found", file=sys.stderr)
         return 1
+    m = doc_to_manifest(spark, docjson)
     # the rescan must derive segment keys with the SAME span the backup used:
     # manifest doc first, then --config, else the default — a non-default span
     # otherwise reports every segment missing
-    span = (mstore.load_doc() or {}).get("segment_span")
+    span = docjson.get("segment_span")
     if span is None and doc is not None:
         span = cfgmod.backup_config(doc).segment_span
     rescan = mani.build_manifest(store_from_path(spark, args.store).read(spark), span or 1000)
     observed = rescan.select("key", "record_count", "start_offset", "end_offset")
-    scan = integrity_scan(m, observed)
-    summary = validation_summary(scan.withColumnRenamed("status", "status"))
+    # one rescan of the store: both outputs read the materialized scan
+    scan = integrity_scan(m, observed).localCheckpoint(eager=True)
     _emit({
         "segments": _rows(scan.orderBy("key")),
-        "summary": _rows(summary)[0],
+        "summary": _rows(validation_summary(scan))[0],
     })
     return 0
 
@@ -188,6 +189,8 @@ def cmd_validate_restore(args, _doc) -> int:
         ]
         watermarks = fetch_watermarks(spark, args.bootstrap_servers, parts)
     elif args.target_parquet:
+        # materialized once: both checks, each emitted and summarized, then
+        # read these few rows instead of rescanning the target four times
         watermarks = (
             spark.read.parquet(args.target_parquet)
             .groupBy("topic", "partition")
@@ -195,6 +198,7 @@ def cmd_validate_restore(args, _doc) -> int:
                 F.min("offset").alias("earliest"),
                 (F.max("offset") + 1).alias("latest"),
             )
+            .localCheckpoint(eager=True)
         )
     else:
         print("validate-restore needs --bootstrap-servers or --target-parquet",
@@ -286,7 +290,7 @@ def cmd_status(args, _doc) -> int:
     if docjson is None:
         print("no manifest found", file=sys.stderr)
         return 1
-    m = mstore.load(spark)
+    m = doc_to_manifest(spark, docjson)
     totals = mani.manifest_totals(m).collect()[0].asDict()
     _emit({
         "backup_id": args.backup_id,
@@ -505,7 +509,8 @@ def _load_groups(spark, path: str):
 
     with open(path) as fh:
         rows = jsonmod.load(fh)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r["group_id"], r["topic"], int(r["partition"]), int(r["offset"])) for r in rows],
         "group_id string, topic string, partition int, offset long",
     )
@@ -651,7 +656,8 @@ def cmd_three_phase_restore(args, doc) -> int:
     out.write.mode("overwrite").parquet(args.out)
     target = spark.read.parquet(args.out)
     detailed = build_offset_mapping(target)
-    ranges = mapping_ranges(detailed)
+    # emitted AND fed to phase 3: one target scan for both
+    ranges = mapping_ranges(detailed).localCheckpoint(eager=True)
     result = {
         "restored_records": target.count(),
         "out": args.out,
@@ -760,7 +766,7 @@ def cmd_evidence(args, doc) -> int:
     if docjson is None:
         print("no manifest found", file=sys.stderr)
         return 1
-    m = mstore.load(spark)
+    m = doc_to_manifest(spark, docjson)
     span = docjson.get("segment_span") or 1000
     rescan = mani.build_manifest(store_from_path(spark, args.store).read(spark), span)
     scan = integrity_scan(m, rescan.select("key", "record_count", "start_offset", "end_offset"))

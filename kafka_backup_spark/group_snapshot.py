@@ -65,7 +65,7 @@ def read_snapshot(store_root: str, backup_id: str) -> dict | None:
 
 
 def flatten_snapshot(doc: dict) -> list[tuple[str, str, int, int]]:
-    """Wire shape → flat rows, ready for createDataFrame / J4 import."""
+    """Wire shape → flat rows, ready for local_frame / J4 import."""
     return [
         (g["group_id"], topic, int(p), int(off))
         for g in doc.get("groups", [])
@@ -78,10 +78,13 @@ def load_snapshot(spark, store_root: str, backup_id: str):
     """Snapshot file → (group_id, topic, partition, offset) DataFrame — the
     input to offset_reset.import_group_snapshot (J4, restore/engine.rs
     auto_consumer_groups path).  None when no snapshot exists."""
+    from kafka_backup_spark.schema import local_frame
+
     doc = read_snapshot(store_root, backup_id)
     if doc is None:
         return None
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         flatten_snapshot(doc),
         "group_id string, topic string, partition int, offset long",
     )

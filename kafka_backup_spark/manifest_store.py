@@ -10,7 +10,12 @@ module only converts DataFrame ⇄ document and applies the save-time merge
 
 Driver-side JSON I/O is deliberate: a manifest is ~1 row per 128 MB of data
 (≈800k rows at 100 TB, a few hundred MB of JSON at most), and the reference
-makes the same single-writer assumption for the manifest object.
+makes the same single-writer assumption for the manifest object.  The loaded
+frame is built from Arrow batches (schema.local_frame) and decoded in the JVM:
+a ``LocalRelation`` held in driver memory, as the collected document already
+is, up to ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB by
+default), a JVM RDD of those batches above it.  No action on it starts a
+Python worker.
 """
 
 from __future__ import annotations
@@ -20,9 +25,9 @@ import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kafka_backup_spark import manifest as mani
+from kafka_backup_spark.schema import local_frame
 
 MANIFEST_SCHEMA = (
     "topic string, partition int, key string, start_offset long, end_offset long, "
@@ -85,17 +90,14 @@ def manifest_to_doc(
 
 
 def doc_to_manifest(spark: SparkSession, doc: dict[str, Any]) -> DataFrame:
+    # (topic, partition, *SEGMENT_FIELDS) is MANIFEST_SCHEMA's column order
     rows = [
         (t["name"], p["partition"], *[s[f] for f in SEGMENT_FIELDS])
         for t in doc["topics"]
         for p in t["partitions"]
         for s in p["segments"]
     ]
-    cols = ["topic", "partition", *SEGMENT_FIELDS]
-    # reorder: SEGMENT_FIELDS starts with key which matches schema order
-    return spark.createDataFrame(
-        [tuple(r) for r in rows], MANIFEST_SCHEMA
-    ).select(*cols)
+    return local_frame(spark, rows, MANIFEST_SCHEMA)
 
 
 class ManifestStore:
@@ -132,12 +134,14 @@ class ManifestStore:
         """S8 merge-on-write: load stored manifest, union-merge with
         ``current`` (stored wins on key/start_offset collisions —
         backup/engine.rs:1240-1301), write back atomically."""
-        spark = current.sparkSession
-        existing = self.load(spark)
-        merged = mani.merge_manifests(existing, current) if existing is not None else current
-        if segment_span is None:
-            prior = self.load_doc()
-            segment_span = prior.get("segment_span") if prior else None
+        prior = self.load_doc()
+        if prior is None:
+            merged = current
+        else:
+            existing = doc_to_manifest(current.sparkSession, prior)
+            merged = mani.merge_manifests(existing, current)
+            if segment_span is None:
+                segment_span = prior.get("segment_span")
         doc = manifest_to_doc(
             merged,
             self.backup_id,

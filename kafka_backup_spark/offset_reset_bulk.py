@@ -183,9 +183,10 @@ def performance_stats(spark, report: dict) -> dict:
     """A10 percentiles over the run's commit latencies via the SAME operator
     the oracle gate checks (offset_reset.reset_latency_percentiles)."""
     from kafka_backup_spark.offset_reset import reset_latency_percentiles
+    from kafka_backup_spark.schema import local_frame
 
     lat = report.get("latencies_ms") or [0.0]
-    df = spark.createDataFrame([(float(x),) for x in lat], "latency_ms double")
+    df = local_frame(spark, [(float(x),) for x in lat], "latency_ms double")
     row = reset_latency_percentiles(df, exact=True).collect()[0]
     return {
         "avg_latency_ms": round(row["avg"], 3),

@@ -620,30 +620,42 @@ WHERE prev_offset IS NOT NULL AND "offset" > prev_offset + 1
 _SEG_BUCKETED: dict[tuple[str, str], str] = {}
 
 
+def _reraise(exc: OSError) -> None:
+    raise exc
+
+
 def _source_fingerprint(sf_dir: str) -> str:
     """Cheap content key for the record stream under ``sf_dir``: md5 over
     the sorted (relpath, size, mtime_ns) of events.parquet's files.  A
     dataset regenerated in place gets a NEW fingerprint, so the temp
     segment store below is never mistaken for current (ADVICE r14 #1).
     Remote / unwalkable paths fall back to the path hash — those datasets
-    are immutable fixtures in this harness."""
+    are immutable fixtures in this harness.  A stat that fails mid-walk
+    takes the same path-only fallback (with one WARNING), never a hash of
+    a partial file list."""
     import hashlib
+    import logging
     import os
 
     src = os.path.join(sf_dir, "events.parquet")
     h = hashlib.md5(sf_dir.encode())
+    path_only = h.hexdigest()[:12]
     try:
         if os.path.isfile(src):
             st = os.stat(src)
             h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
         elif os.path.isdir(src):
-            for root, _dirs, files in sorted(os.walk(src)):
+            for root, _dirs, files in sorted(os.walk(src, onerror=_reraise)):
                 for f in sorted(files):
                     st = os.stat(os.path.join(root, f))
                     rel = os.path.relpath(os.path.join(root, f), src)
                     h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns}".encode())
-    except OSError:
-        pass
+    except OSError as exc:
+        logging.getLogger(__name__).warning(
+            "cannot fingerprint %s (%s); keying its segment store by path only",
+            src, exc,
+        )
+        return path_only
     return h.hexdigest()[:12]
 
 

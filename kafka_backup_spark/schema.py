@@ -10,6 +10,8 @@ file-backed paths share every downstream operator.
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -50,6 +52,36 @@ RECORD_COLUMNS = [f.name for f in RECORD_SCHEMA.fields]
 
 #: Partition count used when deriving a record stream from the `events` table.
 EVENTS_NUM_PARTITIONS = 4
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """Driver-held rows → a DataFrame decoded in the JVM, never by Python workers.
+
+    ``spark.createDataFrame(list_of_tuples)`` plans as ``Scan ExistingRDD``
+    over a pickled Python RDD, so every action on the frame starts Python
+    workers and unpickles the rows again.  A ``pyarrow.Table`` typed from
+    ``schema`` is instead handed to the JVM as Arrow batches: below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB by default)
+    it becomes a ``LocalRelation`` (``LocalTableScan``), above it a JVM RDD
+    of Arrow batches (``Scan ExistingRDD arrow``).  Neither path starts a
+    Python worker.  ``rows`` are positional tuples in ``schema``'s field
+    order; ``schema`` is a StructType or a DDL string.  Every product-side
+    rows-to-DataFrame call goes through here (tests/test_local_frame.py
+    guards it)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

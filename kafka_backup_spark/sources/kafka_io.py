@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_backup_spark.functions.globs import glob_to_regex
+from kafka_backup_spark.schema import local_frame
 
 KAFKA_FORMAT = "kafka"
 
@@ -210,8 +211,8 @@ def fetch_watermarks(
         (t, p, earliest.get((t, p), -1), latest.get((t, p), -1))
         for t, p in partitions
     ]
-    return spark.createDataFrame(
-        rows, "topic string, partition int, earliest long, latest long"
+    return local_frame(
+        spark, rows, "topic string, partition int, earliest long, latest long"
     )
 
 

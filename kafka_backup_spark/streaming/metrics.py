@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+from kafka_backup_spark.schema import local_frame
+
 # reference metric names (metrics/registry.rs) → progress-event fields
 METRIC_NAMES = {
     "kafka_backup_records_total": "numInputRows",
@@ -59,7 +61,7 @@ class ProgressMetrics(StreamingQueryListener):
         pass
 
     def to_dataframe(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self.rows or [], PROGRESS_SCHEMA)
+        return local_frame(spark, self.rows, PROGRESS_SCHEMA)
 
 
 def throughput_summary(progress: DataFrame) -> DataFrame:

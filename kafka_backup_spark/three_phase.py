@@ -94,6 +94,10 @@ def run_phase3(
 ) -> tuple[DataFrame, DataFrame]:
     """Phase 3: reset plan + per-group summary. The plan DataFrame is what
     the driver feeds to AdminClient commits (or emits with ``toJSON`` as the
-    reference's shell-script/JSON alternatives, offset_reset.rs:451-520)."""
-    plan = generate_group_plan(group_offsets, detailed_mapping, ranges)
+    reference's shell-script/JSON alternatives, offset_reset.rs:451-520).
+
+    The plan is materialized once (a few rows per group partition): reading
+    the plan rows and the summary then re-runs neither the as-of lookup nor
+    the scan of the target behind ``detailed_mapping``."""
+    plan = generate_group_plan(group_offsets, detailed_mapping, ranges).localCheckpoint(eager=True)
     return plan, plan_summary(plan)

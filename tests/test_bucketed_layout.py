@@ -694,3 +694,34 @@ def test_sidecar_first_root_does_not_bind_family_bucket_count(spark, sf_dir, tmp
     finally:
         for t in ("lineitem_b", "orders_b", "documents_fp_b"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_source_fingerprint_falls_back_to_path_when_stat_fails(tmp_path, monkeypatch, caplog):
+    """A stat failing mid-walk must not hash a partial file list: the
+    fingerprint is the documented path-only fallback, with one WARNING."""
+    import hashlib
+    import logging
+    import os
+
+    from kafka_backup_spark.queries import extra
+
+    sf = str(tmp_path)
+    src = tmp_path / "events.parquet"
+    src.mkdir()
+    for name in ("part-0.parquet", "part-1.parquet"):
+        (src / name).write_bytes(b"x")
+    path_only = hashlib.md5(sf.encode()).hexdigest()[:12]
+    assert extra._source_fingerprint(sf) != path_only
+
+    real_stat = os.stat
+
+    def flaky_stat(path, *args, **kwargs):
+        if str(path).endswith("part-1.parquet"):
+            raise PermissionError(13, "denied", str(path))
+        return real_stat(path, *args, **kwargs)
+
+    monkeypatch.setattr(os, "stat", flaky_stat)
+    with caplog.at_level(logging.WARNING, logger=extra.__name__):
+        assert extra._source_fingerprint(sf) == path_only
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 1 and "path only" in warnings[0].getMessage()

@@ -76,16 +76,23 @@ def test_manifest_doc_roundtrip(spark, sf_dir):
     assert t0["original_partition_count"] == max(p["partition"] for p in t0["partitions"]) + 1
 
 
-def test_manifest_store_merge_on_write(spark, sf_dir, tmp_path):
+def test_manifest_store_merge_on_write(spark, sf_dir, tmp_path, monkeypatch):
+    from kafka_backup_spark import fsio
+
     records = events_as_records(load_table(spark, sf_dir, "events"))
     store = ManifestStore(str(tmp_path), "bk-2")
     first = mani.build_manifest(records.filter(F.col("offset") < 5000), 1000)
-    store.save(first, created_at_ms=1)
+    store.save(first, created_at_ms=1, segment_span=1000)
     # second save overlaps: stored rows must win on key collisions
     second = mani.build_manifest(records, 1000).withColumn(
         "record_count", F.col("record_count") + 7
     )
+    reads = []
+    read_text = fsio.read_text
+    monkeypatch.setattr(fsio, "read_text", lambda path: reads.append(path) or read_text(path))
     doc = store.save(second, created_at_ms=2)
+    assert reads == [store.path()]  # the stored doc is read and parsed once
+    assert doc["segment_span"] == 1000  # carried over from the stored doc
     merged = doc_to_manifest(spark, doc)
     assert merged.count() == mani.build_manifest(records, 1000).count()
     # overlapping segments kept the FIRST save's counts (existing wins)

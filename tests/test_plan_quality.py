@@ -156,6 +156,71 @@ def test_manifest_agg_is_single_exchange(spark, sf_dir):
     assert "InMemoryTableScan" in cached
 
 
+def _one_segment_manifest(tmp_path):
+    """A ManifestStore at ``tmp_path`` holding one stored segment."""
+    import json
+
+    from kafka_backup_spark.manifest_store import ManifestStore
+
+    seg = {"key": "click/0/0", "start_offset": 0, "end_offset": 9, "start_ts": 1,
+           "end_ts": 2, "record_count": 10, "uncompressed_size": 100,
+           "compressed_size": 50}
+    (tmp_path / "bk").mkdir()
+    (tmp_path / "bk" / "manifest.json").write_text(json.dumps({"backup_id": "bk", "topics": [
+        {"name": "click", "partitions": [{"partition": 0, "segments": [seg]}]}]}))
+    return ManifestStore(str(tmp_path), "bk")
+
+
+def test_driver_built_frames_are_local_table_scans(spark, tmp_path):
+    """Manifest, group-offset and snapshot frames are Arrow-built
+    LocalRelations: no pickled Python RDD, so no action on them starts a
+    Python worker."""
+    import json
+
+    from kafka_backup_spark import group_snapshot as gs
+    from kafka_backup_spark.__main__ import _load_groups
+
+    root = str(tmp_path)
+    mstore = _one_segment_manifest(tmp_path)
+    groups_path = tmp_path / "groups.json"
+    groups_path.write_text(json.dumps(
+        [{"group_id": "g", "topic": "click", "partition": 0, "offset": 5}]))
+    gs.write_snapshot(root, "bk", gs.build_snapshot_doc([("g", "click", 0, 5)], 0))
+    frames = {
+        "manifest": mstore.load(spark),
+        "groups": _load_groups(spark, str(groups_path)),
+        "snapshot": gs.load_snapshot(spark, root, "bk"),
+    }
+    for name, df in frames.items():
+        plan = _plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (name, plan)
+        assert df.count() == 1, name
+
+
+def test_large_driver_built_frames_stay_off_python_workers(spark, tmp_path):
+    """Above spark.sql.execution.arrow.localRelationThreshold the Arrow
+    batches become a JVM RDD instead of a LocalRelation; that path must not
+    start Python workers either (a manifest can exceed the 48 MiB default)."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+
+    def lineage(df):
+        return df._jdf.queryExecution().executedPlan().execute().toDebugString()
+
+    mstore = _one_segment_manifest(tmp_path)
+    # the probe itself: a pickled-row frame does show a Python RDD
+    assert "PythonRDD" in lineage(spark.createDataFrame([(1,)], "x long"))
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "0")
+    try:
+        m = mstore.load(spark)
+        plan, rdd = _plan(m), lineage(m)
+    finally:
+        spark.conf.set(key, prior)
+    assert "LocalTableScan" not in plan and "ExistingRDD arrow" in plan, plan
+    assert "PythonRDD" not in rdd, rdd
+    assert m.count() == 1
+
+
 def test_load_table_survives_vanilla_session(spark, sf_dir):
     """Regression for round-1 gate failure: the driver harness builds its own
     SparkSession without spark.sql.legacy.parquet.nanosAsLong, and testdata
