@@ -10,10 +10,20 @@ the same thing with columnar layout, zstd, min/max zone maps and checksums
 built in — so P4's segment pruning becomes ordinary parquet file/row-group
 skipping, and A11's CRC validation becomes parquet footer verification.
 
-Rotation policy (≤128 MB / ≤60 s, writer.rs:237-251) maps to
-``spark.sql.files.maxRecordsPerFile`` for batch and micro-batch triggers for
-streaming. Storage backends (S6: s3/azure/gcs/file/memory) are Hadoop
-filesystem URIs — zero custom code.
+The reference keeps one open segment per (topic, partition) and rotates it
+by size or age (≤128 MB / ≤60 s, writer.rs:237-251).  Here every writer —
+batch ``SegmentStore.write``, ``compact`` and the streaming sink — goes
+through one layout step, ``SegmentStore.layout``: the canonical columns,
+one hash shuffle on (topic, partition) so a single task owns each
+partition directory, and per-write parquet options (``maxRecordsPerFile``
+for the size bound, codec, zstd level).  A batch write therefore opens one
+file per (topic, partition) and rotates it by record count.  Streaming maps
+the age bound onto the trigger: each micro-batch closes the files it
+opened, so a drain adds at most one file (more only past
+``maxRecordsPerFile``) per (topic, partition) per micro-batch, and
+``compact`` later merges those into offset-sorted files of target size.
+Storage backends (S6: s3/azure/gcs/file/memory) are Hadoop filesystem
+URIs — zero custom code.
 """
 
 from __future__ import annotations
@@ -31,6 +41,9 @@ from pyspark.sql.types import (
 from kafka_backup_spark.schema import RECORD_COLUMNS
 
 DEFAULT_MAX_RECORDS_PER_FILE = 4_000_000  # ≈128 MB of typical ~32 B records
+# parquet-mr reads the zstd level from the write job's Hadoop conf; a
+# per-write option with this name lands there and nowhere else
+ZSTD_LEVEL_CONF = "parquet.compression.codec.zstd.level"
 
 # Legacy JSON segment record shape (reference manifest.rs:183-266): key/value
 # are optional base64 strings, header values base64, timestamp epoch-ms.
@@ -118,6 +131,14 @@ def write_legacy_segments(root: str, records, gzip_partitions: frozenset = froze
     return n_files
 
 
+def _glob(spark: SparkSession, pattern: str) -> list:
+    """Hadoop glob, not python glob: works on any S6 backend URI.  Returns
+    the matching FileStatus objects ([] when nothing matches)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(pattern)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    return list(fs.globStatus(p) or [])
+
+
 class SegmentStore:
     """Write/read the canonical record stream as a partitioned Parquet store."""
 
@@ -126,6 +147,55 @@ class SegmentStore:
 
     def topics_path(self) -> str:
         return f"{self.root}/topics"
+
+    @staticmethod
+    def layout(
+        records: DataFrame,
+        max_records_per_file: int = DEFAULT_MAX_RECORDS_PER_FILE,
+        compression: str | None = None,
+        zstd_level: int | None = None,
+    ) -> tuple[DataFrame, dict[str, str]]:
+        """The store's one layout step: ``(frame, writer options)`` for a
+        ``partitionBy("topic", "partition")`` parquet write, batch or
+        streaming.
+
+        The frame is the canonical column projection, hash-shuffled on
+        (topic, partition) so one task writes each partition directory (no
+        small-file explosion at 1000 executors).  The shuffle width is
+        ``spark.sql.shuffle.partitions``, passed explicitly: a keys-only
+        repartition lets AQE coalesce the shuffle, which shrinks a
+        streaming micro-batch to a couple of writer tasks.
+
+        The options carry the reference's rotation and codec knobs
+        (config.rs:415-419): ``maxRecordsPerFile``, the codec and the zstd
+        level.  The level is a per-write option, so it reaches only this
+        write's Hadoop conf, never the session's shared one."""
+        n = int(records.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        frame = records.select(*[c for c in RECORD_COLUMNS if c in records.columns]).repartition(
+            n, "topic", "partition"
+        )
+        options = {"maxRecordsPerFile": str(int(max_records_per_file))}
+        if compression is not None:
+            options["compression"] = compression
+        if zstd_level is not None:
+            options[ZSTD_LEVEL_CONF] = str(int(zstd_level))
+        return frame, options
+
+    @staticmethod
+    def _write_sorted(frame: DataFrame, options: dict[str, str], mode: str, path: str) -> None:
+        """Batch tail of the layout: sort by the PARTITION COLUMNS first,
+        then offset.  The dynamic partition writer requires ordering on its
+        partition columns and inserts its own NON-STABLE sort when the
+        child doesn't provide it — a bare offset sort was silently
+        destroyed, leaving files offset-shuffled within each partition dir
+        (caught by the compaction plan→execution parity test)."""
+        (
+            frame.sortWithinPartitions("topic", "partition", "offset")
+            .write.options(**options)
+            .partitionBy("topic", "partition")
+            .mode(mode)
+            .parquet(path)
+        )
 
     def write(
         self,
@@ -137,40 +207,29 @@ class SegmentStore:
         """S4: segment sink. partitionBy(topic, partition) reproduces the
         reference's object-key layout; each task writes its own files in
         parallel (the reference's one-in-flight-upload pipeline is subsumed
-        by executor parallelism).  ``compression``/``zstd_level`` map the
-        reference's codec knobs (config.rs:415-419) onto the parquet writer
-        (level rides the Hadoop conf — parquet reads it at write time)."""
-        if zstd_level is not None:
-            records.sparkSession.sparkContext._jsc.hadoopConfiguration().set(
-                "parquet.compression.codec.zstd.level", str(int(zstd_level))
-            )
-        writer = (
-            records.select(*[c for c in RECORD_COLUMNS if c in records.columns])
-            # one shuffle so each (topic, partition) is written by one task →
-            # no small-file explosion at 1000 executors
-            .repartition("topic", "partition")
-            # sort by the PARTITION COLUMNS first, then offset: the dynamic
-            # partition writer requires ordering on its partition columns and
-            # inserts its own NON-STABLE sort when the child doesn't provide
-            # it — a bare offset sort was silently destroyed, leaving files
-            # offset-shuffled within each partition dir (caught by the
-            # compaction plan→execution parity test)
-            .sortWithinPartitions("topic", "partition", "offset")
-            .write.option("maxRecordsPerFile", max_records_per_file)
+        by executor parallelism).  Files are offset-sorted."""
+        frame, options = self.layout(records, max_records_per_file, compression, zstd_level)
+        self._write_sorted(frame, options, "append", self.topics_path())
+
+    def topic_dirs(self, spark: SparkSession) -> list[str]:
+        """The store's hive-layout ``topic=`` directories (legacy JSON
+        segments may share the store root; they are not listed).  Expanded
+        here rather than handed to Spark as a ``topic=*`` glob: Spark's
+        sink-log probe (``FileStreamSink.hasMetadata``) stats a single glob
+        path literally and logs a FileNotFoundException trace on every
+        read."""
+        return sorted(
+            f"{self.topics_path()}/{st.getPath().getName()}"
+            for st in _glob(spark, f"{self.topics_path()}/topic=*")
         )
-        if compression is not None:
-            writer = writer.option("compression", compression)
-        writer.partitionBy("topic", "partition").mode("append").parquet(self.topics_path())
 
     def read(self, spark: SparkSession) -> DataFrame:
         """S5: segment source. Partition-column recovery of topic/partition is
         automatic; offset/timestamp predicates push down to row-group stats."""
-        # load only the hive-layout topic dirs (legacy JSON segments may share
-        # the store root); basePath keeps partition-column recovery rooted
-        df = (
-            spark.read.option("basePath", self.topics_path())
-            .parquet(f"{self.topics_path()}/topic=*")
-        )
+        # basePath keeps partition-column recovery rooted; an empty store
+        # still hands Spark the glob, so it fails exactly as before
+        dirs = self.topic_dirs(spark) or [f"{self.topics_path()}/topic=*"]
+        df = spark.read.option("basePath", self.topics_path()).parquet(*dirs)
         return df.withColumn("partition", df["partition"].cast("int"))
 
     def read_any(self, spark: SparkSession) -> DataFrame:
@@ -179,17 +238,11 @@ class SegmentStore:
         by magic bytes, restore/helpers.rs:17-52; here format is carried by
         the file extension, so each side is a normal pruned scan and a
         migration-era store restores without any conversion step)."""
-        def _hits(pattern: str) -> bool:
-            # Hadoop glob, not python glob: works on any S6 backend URI
-            jvm = spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(pattern)
-            fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-            return bool(fs.globStatus(p))
-
-        has_legacy = _hits(f"{self.topics_path()}/*/partition=*/segment-*.json") or _hits(
-            f"{self.topics_path()}/*/partition=*/segment-*.json.gz"
+        has_legacy = bool(
+            _glob(spark, f"{self.topics_path()}/*/partition=*/segment-*.json")
+            or _glob(spark, f"{self.topics_path()}/*/partition=*/segment-*.json.gz")
         )
-        has_parquet = _hits(f"{self.topics_path()}/topic=*/partition=*/*.parquet")
+        has_parquet = bool(_glob(spark, f"{self.topics_path()}/topic=*/partition=*/*.parquet"))
         if has_legacy and has_parquet:
             return self.read(spark).unionByName(self.read_legacy(spark))
         if has_legacy:
@@ -215,8 +268,11 @@ class SegmentStore:
         serde_json emits (pretty-printed JSON would need multiLine=true,
         which forces whole-file parsing and loses per-line splitting).
         """
-        path = f"{self.topics_path()}/*/partition=*/segment-*.json*"
-        df = spark.read.schema(LEGACY_JSON_SCHEMA).json(path)
+        # expanded here for the same reason as topic_dirs; no match still
+        # hands Spark the glob, which fails as before
+        pattern = f"{self.topics_path()}/*/partition=*/segment-*.json*"
+        paths = [st.getPath().toString() for st in _glob(spark, pattern)] or [pattern]
+        df = spark.read.schema(LEGACY_JSON_SCHEMA).json(paths)
         fn = F.input_file_name()
         return df.select(
             F.unbase64(F.col("key")).alias("key"),
@@ -333,22 +389,24 @@ class SegmentStore:
         """Operational compaction: incremental/streaming backups accumulate a
         file per micro-batch per (topic, partition); rewrite the store so
         each partition holds offset-sorted files of target size again (the
-        reference's 128 MB segment discipline, writer.rs:237-251). Atomic
-        via write-new → swap directories; at scale run per-topic to bound
-        the rewrite working set."""
+        reference's 128 MB segment discipline, writer.rs:237-251).  At scale
+        run per-topic to bound the rewrite working set.
+
+        The rewrite lands in ``.compact-tmp/`` and is swapped in with two
+        ``os.rename`` calls: ``topics/`` → ``.compact-old/``, then
+        ``.compact-tmp/`` → ``topics/``.  A crash between the two leaves no
+        ``topics/``, so reads (and a rerun of ``compact``) fail as on an
+        empty store until an operator renames ``.compact-old/`` (the old
+        files) or ``.compact-tmp/`` (the complete rewrite) back to
+        ``topics/``.  The swap also drops the streaming sink's
+        ``_spark_metadata`` log, which lives under ``topics/``.  Local paths
+        only: object stores have no directory rename."""
         import os
         import shutil
 
-        current = self.read(spark)
         tmp_root = f"{self.root}/.compact-tmp"
-        (
-            current.repartition("topic", "partition")
-            .sortWithinPartitions("topic", "partition", "offset")
-            .write.option("maxRecordsPerFile", max_records_per_file)
-            .partitionBy("topic", "partition")
-            .mode("overwrite")
-            .parquet(tmp_root)
-        )
+        frame, options = self.layout(self.read(spark), max_records_per_file)
+        self._write_sorted(frame, options, "overwrite", tmp_root)
         old = f"{self.root}/.compact-old"
         os.rename(self.topics_path(), old)
         os.rename(tmp_root, self.topics_path())

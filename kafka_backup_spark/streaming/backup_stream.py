@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kafka_backup_spark.schema import RECORD_SCHEMA
-from kafka_backup_spark.sources.segments import SegmentStore
+from kafka_backup_spark.sources.segments import DEFAULT_MAX_RECORDS_PER_FILE, SegmentStore
 
 
 def read_record_stream(
@@ -55,7 +55,7 @@ def stream_backup(
     trigger: dict | None = None,
     compression: str | None = "zstd",
     zstd_level: int | None = None,
-    max_records_per_file: int | None = None,
+    max_records_per_file: int = DEFAULT_MAX_RECORDS_PER_FILE,
 ) -> StreamingQuery:
     """T1/T3/T4: continuous backup of a record stream into the segment store.
 
@@ -64,35 +64,33 @@ def stream_backup(
     then stop: the reference's resume-from-checkpoint one-shot run);
     ``{"processingTime": "..."}`` = continuous mode.
 
-    The sink honors the SAME store discipline as the batch path
-    (``SegmentStore.write``): zstd by default (a streaming-backed store must
-    not silently end up snappy next to zstd batch segments, which would
-    falsify the manifest's compressed_size model), bounded file sizes via
-    ``maxRecordsPerFile``, and the canonical column projection.
-    """
-    from kafka_backup_spark.schema import RECORD_COLUMNS
-    from kafka_backup_spark.sources.segments import DEFAULT_MAX_RECORDS_PER_FILE
+    The sink goes through the store's layout step (``SegmentStore.layout``),
+    as ``SegmentStore.write`` and ``compact`` do: the canonical column
+    projection, the (topic, partition) shuffle, bounded file sizes via
+    ``maxRecordsPerFile``, and zstd by default (a streaming-backed store
+    must not silently end up snappy next to zstd batch segments, which
+    would falsify the manifest's compressed_size model).  Each micro-batch
+    therefore adds one file per (topic, partition) it touches (more only
+    past ``maxRecordsPerFile``).  For a Kafka source the shuffle also
+    merges the ``minPartitions`` splits of one partition, as the batch path
+    already does.
 
-    if zstd_level is not None:
-        records.sparkSession.sparkContext._jsc.hadoopConfiguration().set(
-            "parquet.compression.codec.zstd.level", str(int(zstd_level))
-        )
-    writer = (
-        records.select(*[c for c in RECORD_COLUMNS if c in records.columns])
-        .writeStream.format("parquet")
+    Unlike the batch writers, the sink does not sort by offset: Structured
+    Streaming rejects ``sortWithinPartitions`` on a streaming frame, so
+    stream-written files stay offset-unsorted until ``compact`` rewrites
+    them.
+    """
+    frame, options = store.layout(records, max_records_per_file, compression, zstd_level)
+    return (
+        frame.writeStream.format("parquet")
+        .options(**options)
         .option("path", store.topics_path())
         .option("checkpointLocation", checkpoint_dir)
-        .option(
-            "maxRecordsPerFile",
-            max_records_per_file if max_records_per_file is not None else DEFAULT_MAX_RECORDS_PER_FILE,
-        )
         .partitionBy("topic", "partition")
         .outputMode("append")
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
     )
-    if compression is not None:
-        writer = writer.option("compression", compression)
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
 
 
 def dedup_stream(records: DataFrame, watermark: str = "10 minutes") -> DataFrame:

@@ -12,14 +12,19 @@ from kafka_backup_spark.schema import events_as_records, load_table
 from kafka_backup_spark.sources.segments import SegmentStore
 
 
-def _plan(df) -> str:
+def _captured(fn) -> str:
+    """What ``fn()`` prints (``explain`` prints rather than returns)."""
     import contextlib
     import io
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
+        fn()
     return buf.getvalue()
+
+
+def _plan(df) -> str:
+    return _captured(lambda: df.explain("formatted"))
 
 
 def _optimized(df) -> str:
@@ -74,6 +79,62 @@ def test_segment_store_pushes_pitr_predicates(spark, sf_dir, tmp_path):
     # column pruning: value/key bytes are not read for a 3-column projection
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
     assert "value" not in read_schema and "headers" not in read_schema
+
+
+def _executed_plans(spark, action) -> list[str]:
+    """Physical plans of the SQL executions that ``action()`` starts, as
+    the SQL status store last recorded them (AQE re-plans included)."""
+    sql = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        ex = sql.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    last = max((e.executionId() for e in executions()), default=-1)
+    action()
+    return [e.physicalPlanDescription() for e in executions() if e.executionId() > last]
+
+
+def _store_exchange(plan: str, n: str) -> bool:
+    """``Exchange hashpartitioning(topic, partition, n)``, in the tree form
+    of ``explain()`` or the node-arguments form of a formatted plan."""
+    import re
+
+    pat = rf"(Exchange |Arguments: )hashpartitioning\(topic#\d+, partition#\d+, {n}\)"
+    return re.search(pat, plan) is not None
+
+
+def test_segment_writers_share_the_layout_shuffle(spark, sf_dir, tmp_path):
+    """write, compact and the streaming sink all plan the layout step's
+    (topic, partition) exchange at spark.sql.shuffle.partitions, and AQE
+    does not coalesce it (a coalesced read shrinks a micro-batch to a
+    couple of writer tasks)."""
+    from kafka_backup_spark.streaming.backup_stream import read_record_stream, stream_backup
+
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    records = events_as_records(load_table(spark, sf_dir, "events"))
+    source = str(tmp_path / "src")
+    for i in range(2):
+        records.filter(F.col("offset") % 2 == i).write.mode("append").parquet(source)
+    store = SegmentStore(str(tmp_path / "store"))
+
+    writes = {
+        "write": _executed_plans(spark, lambda: store.write(records)),
+        "compact": _executed_plans(spark, lambda: store.compact(spark)),
+    }
+    for name, plans in writes.items():
+        plan = next(p for p in plans if "InsertIntoHadoopFsRelationCommand" in p)
+        assert _store_exchange(plan, n), (name, plan)
+        assert "AQEShuffleRead" not in plan, (name, plan)
+
+    q = stream_backup(read_record_stream(spark, source), SegmentStore(str(tmp_path / "s2")),
+                      str(tmp_path / "ckpt"), {"availableNow": True})
+    q.awaitTermination(120)
+    plan = _captured(q.explain)
+    assert _store_exchange(plan, n), plan
+    assert "AQEShuffleRead" not in plan, plan
 
 
 def test_tpch_q5_uses_broadcast_joins_only(spark):
