@@ -138,9 +138,9 @@ def main() -> int:
             t0 = time.perf_counter()
             _layout.materialize_fingerprints(spark, sf_dir, root)
             layout_build = round(layout_build + time.perf_counter() - t0, 3)
-            from kafka_backup_spark import catalog as _cat
+            from kafka_backup_spark import artifacts
 
-            _cat.release_plan_cache(spark)  # plans built pre-sidecar
+            artifacts.release(spark)  # plans and layout manifest read pre-sidecar
 
     qs = catalog.queries()
     # repeat each query and keep the fastest run: this VM shows sporadic

@@ -7,6 +7,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from kafka_backup_spark import artifacts
 from kafka_backup_spark.queries.core import CORE_QUERIES
 from kafka_backup_spark.queries.extra import EXTRA_QUERIES
 from kafka_backup_spark.queries.pipeline import PIPELINE_QUERIES
@@ -141,81 +142,15 @@ ALL_QUERIES.update({n: v for n, v in _MERGED.items() if n not in ALL_QUERIES})
 # like a SQL engine caches prepared statements: DataFrames are immutable
 # and hold their *analyzed* plan, so reuse is safe even if a temp view is
 # later re-pointed elsewhere (the cached plan no longer consults the view).
-#
-# Staleness contract matches common._META_CACHE / textops' gram cache:
-# keyed on (applicationId, name, sf_dir), parquet under sf_dir is immutable
-# for the session; in-place writers call release_plan_cache(spark).
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_PLAN_CACHE_CAP = 1024  # ~90 queries × a handful of sf_dirs; guards runaway
 
 
 def _plan_cached(name: str, fn) -> Callable[[SparkSession, str], DataFrame]:
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        app = spark.sparkContext.applicationId
-        for k in [k for k in _PLAN_CACHE if k[0] != app]:
-            _PLAN_CACHE.pop(k, None)  # entries left by dead sessions
-        key = (app, name, sf_dir)
-        df = _PLAN_CACHE.get(key)
-        if df is None:
-            while len(_PLAN_CACHE) >= _PLAN_CACHE_CAP:
-                _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
-            df = fn(spark, sf_dir)
-            _PLAN_CACHE[key] = df
-        return df
+        return artifacts.get_or_build(spark, "plan", (name, sf_dir), lambda: fn(spark, sf_dir))
 
     wrapper.__name__ = f"cached:{name}"
     wrapper.__wrapped__ = fn
     return wrapper
-
-
-def release_plan_cache(spark: SparkSession | None = None) -> None:
-    """Drop cached plans (one session's, or all). Plans hold no executor
-    storage — this only frees driver-side plan objects.  The TPC-H view
-    memo is dropped with them: a temp view holds its own analyzed plan, so
-    leaving it registered after a release would serve the same stale file
-    listing the plan cache just gave up."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    for k in list(_PLAN_CACHE):
-        if app is None or k[0] == app:
-            _PLAN_CACHE.pop(k, None)
-    from kafka_backup_spark.queries import pipeline
-
-    # the footprint-gate memo goes with the plans: a dataset regenerated at
-    # a larger scale under the SAME path must re-decide the AQE-crossover
-    # gate, not serve the stale verdict (ADVICE r12).  Process-wide, like
-    # the sf_dir-keyed plans it feeds.
-    pipeline._GATE_MEMO.clear()
-    # money-mode memos share _GATE_MEMO's staleness story (footer-derived,
-    # data-keyed): a regenerated dataset must re-prove its overflow window
-    pipeline._MONEY_MODE.clear()
-    pipeline._MONEY_BOUNDS.clear()
-    # the bucketed-segment-store memo likewise (ADVICE r14 #1): the table
-    # name embeds a source-data fingerprint, so re-resolving after a
-    # release lands a regenerated dataset on a FRESH store path instead of
-    # serving the stale compacted store
-    from kafka_backup_spark.queries import extra
-
-    for k in list(extra._SEG_BUCKETED):
-        if app is None or k[0] == app:
-            extra._SEG_BUCKETED.pop(k, None)
-    # the layout-manifest memo too: a family or sidecar added to the root
-    # mid-session (bench builds the fp sidecar after registration) must be
-    # visible to the next plan build, not hidden behind the stale manifest
-    for k in list(pipeline._LAYOUTS):
-        if app is None or k[0] == app:
-            pipeline._LAYOUTS.pop(k, None)
-    for k in list(pipeline._VIEWS):
-        if app is None or k[0] == app:
-            pipeline._VIEWS.pop(k, None)
-            # also drop the REGISTERED view when the session is live: a temp
-            # view holds its own analyzed plan, so direct spark.sql/table
-            # access between a release and the next catalog query would
-            # still serve the stale file listing the release dropped
-            if spark is not None:
-                try:
-                    spark.catalog.dropTempView(k[1])
-                except Exception:
-                    pass  # session stopping concurrently; nothing to drop
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_backup_spark import artifacts
 from kafka_backup_spark.functions.murmur2 import kafka_partition_expr
 
 
@@ -43,10 +44,6 @@ def _dispersed_expr(num_partitions: int) -> Column:
     # stride-independent round-robin for filtered/compacted streams: any
     # periodic offset pattern is scrambled before the mod (ADVICE r2)
     return F.pmod(F.xxhash64("partition", "offset"), F.lit(num_partitions)).cast("int")
-
-
-# per-session result of the executor kernel probe (applicationId → ok)
-_KERNEL_PROBE: dict[str, bool] = {}
 
 
 def pandas_kernel_available(spark) -> bool:
@@ -66,11 +63,10 @@ def pandas_kernel_available(spark) -> bool:
     executor environment stays homogeneous for the session.  With dynamic
     allocation, executors added AFTER the probe are not certified; on
     clusters where Python deps differ per node, pass ``impl="jvm"``
-    explicitly — the fold needs nothing but the JVM."""
-    app = spark.sparkContext.applicationId
-    if app not in _KERNEL_PROBE:
-        for k in [k for k in _KERNEL_PROBE if k != app]:
-            _KERNEL_PROBE.pop(k, None)  # dead sessions
+    explicitly — the fold needs nothing but the JVM.  The result is a
+    session artifact of kind ``kernel-probe``."""
+
+    def probe() -> bool:
         try:
             dp = max(1, spark.sparkContext.defaultParallelism)
             rows = (
@@ -83,12 +79,11 @@ def pandas_kernel_available(spark) -> bool:
                 )
                 .collect()
             )
-            _KERNEL_PROBE[app] = len(rows) == dp and all(
-                r["p"] is not None for r in rows
-            )
+            return len(rows) == dp and all(r["p"] is not None for r in rows)
         except Exception:
-            _KERNEL_PROBE[app] = False
-    return _KERNEL_PROBE[app]
+            return False
+
+    return artifacts.get_or_build(spark, "kernel-probe", "murmur2", probe)
 
 
 def assign_target_partitions(

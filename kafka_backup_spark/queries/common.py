@@ -16,6 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_backup_spark import artifacts, fsio
 from kafka_backup_spark import manifest as mani
 from kafka_backup_spark.schema import events_as_records, load_table
 
@@ -101,7 +102,7 @@ def small_table(sf_dir: str, name: str) -> bool:
     back is the pinned spread copy (safe to coalesce for task-count
     control) or a streamed parquet scan (must keep its natural splits)."""
     try:
-        return _dataset_bytes(f"{sf_dir}/{name}.parquet") <= _HOT_TABLE_MAX_BYTES
+        return fsio.dataset_bytes(f"{sf_dir}/{name}.parquet") <= _HOT_TABLE_MAX_BYTES
     except OSError:
         return False
 
@@ -145,9 +146,9 @@ def records_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gate (100-TB backups) it streams from parquet and the scan's own
     splits provide the parallelism."""
     try:
-        nbytes = _dataset_bytes(f"{sf_dir}/events.parquet")
+        nbytes = fsio.dataset_bytes(f"{sf_dir}/events.parquet")
         small = nbytes <= _HOT_TABLE_MAX_BYTES
-    except OSError:  # remote / unsizable: stream
+    except OSError:  # missing: stream, and let the scan report it
         small = False
     if not small:
         return build_records_df(spark, sf_dir)
@@ -169,19 +170,8 @@ def records_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bounded by segment/partition counts, not data volume (a 100 TB backup's
 # manifest is ~millions of rows of metadata — MEMORY_AND_DISK persists it
 # on one executor-cluster comfortably, and every validation/describe/reset
-# query starts from it instead of the raw stream).
-#
-# Staleness contract (same as textops._shared_gram_arrays): keyed on
-# (applicationId, sf_dir, kind) with NO file-modification check — parquet
-# under sf_dir is immutable for the session.  In-place writers must call
-# release_meta_cache(spark).
-_META_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-# ~8 metadata kinds + the records pin + up to 10 hot-table pins per sf_dir
-# (~19 entries) → room for ~6 concurrently-hot sf_dirs before oldest entries
-# unpersist.  The cap guards pathological many-directory sessions; entries
-# are bounded by the hot-table gate (≤256 MB each), and an evicted pin is a
-# perf regression (serial re-scan), never a correctness problem.
-_META_CACHE_CAP = 128
+# query starts from it instead of the raw stream).  Each pin is a session
+# artifact of kind ``meta`` (kafka_backup_spark.artifacts).
 
 
 def _shared_meta(
@@ -193,45 +183,17 @@ def _shared_meta(
     layout makes every downstream stage schedule 32 near-empty tasks.  Pass
     ``parts=None`` for data-proportional frames (the offset mapping) to keep
     the build's natural partitioning."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _META_CACHE if k[0] != app]:
-        _META_CACHE.pop(k, None)  # drop handles left by dead sessions
-    key = (app, sf_dir, kind)
-    if key not in _META_CACHE:
-        # bounded registry: a long-lived session touching many sf_dirs must
-        # not pin storage monotonically — evict oldest-inserted first
-        while len(_META_CACHE) >= _META_CACHE_CAP:
-            old = _META_CACHE.pop(next(iter(_META_CACHE)))
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+
+    def pin() -> DataFrame:
         df = build()
-        if parts is not None:
-            df = df.coalesce(parts)
-        _META_CACHE[key] = df.persist()
-    return _META_CACHE[key]
+        return (df if parts is None else df.coalesce(parts)).persist()
+
+    return artifacts.get_or_build(spark, "meta", (sf_dir, kind), pin)
 
 
 _HOT_TABLE_MAX_BYTES = int(
     os.environ.get("SPARK_GRAFT_HOT_TABLE_MAX_BYTES", str(256 << 20))
 )
-
-
-def _dataset_bytes(path: str) -> int:
-    """Size of a parquet dataset: a single file's size, or the recursive sum
-    for the directory layout Spark itself writes (os.path.getsize on a
-    directory returns the ~4 KB inode — which would silently disarm the pin
-    gate for every Spark-written table).  Raises OSError for paths the local
-    filesystem can't stat (object-store URIs) — callers treat that as
-    'stream, don't pin'."""
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                total += os.path.getsize(os.path.join(root, f))
-        return total
-    return os.path.getsize(path)  # single file; raises OSError if unstatable
 
 
 def hot_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -247,15 +209,15 @@ def hot_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Scale gate: tables larger than SPARK_GRAFT_HOT_TABLE_MAX_BYTES (default
     256 MB) stream straight from parquet — at that size the scan itself
     yields enough splits for parallelism and pinning a fact table would be
-    wrong at 100 TB.  Unsizable paths (object stores) stream too.
-    Staleness contract is _META_CACHE's: sf_dir is immutable for the
-    session; in-place writers call release_meta_cache(spark)."""
+    wrong at 100 TB.  Object-store and ``file://`` paths are sized through
+    the Hadoop filesystem (fsio.dataset_bytes) and pin under the gate too;
+    a missing path streams, and the scan reports it."""
     path = f"{sf_dir}/{name}.parquet"
     try:
-        nbytes = _dataset_bytes(path)
+        nbytes = fsio.dataset_bytes(path)
         if nbytes > _HOT_TABLE_MAX_BYTES:
             return spark.read.parquet(path)
-    except OSError:  # remote / unsizable: stream, don't pin
+    except OSError:  # missing: stream, and let the scan report it
         return spark.read.parquet(path)
     return _shared_meta(
         spark, sf_dir, f"table:{name}",
@@ -279,24 +241,6 @@ def cold_table(spark: SparkSession, sf_dir: str, name: str, *columns: str) -> Da
     tests pin the no-pin path for wide reads."""
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     return df.select(*columns) if columns else df
-
-
-def release_meta_cache(spark: SparkSession | None = None) -> None:
-    """Unpersist every metadata frame this module pinned (one session's, or
-    all).  Dead-session handles are dropped without the unpersist call."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    for k in list(_META_CACHE):
-        if app is None or k[0] == app:
-            df = _META_CACHE.pop(k)
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped; nothing left to free
-    # drop cached plans built on the released frames (see textops'
-    # release_gram_cache): a stale plan would silently skip the rebuild
-    from kafka_backup_spark import catalog
-
-    catalog.release_plan_cache(spark)
 
 
 def build_manifest_df(spark: SparkSession, sf_dir: str, span: int = SEGMENT_SPAN) -> DataFrame:

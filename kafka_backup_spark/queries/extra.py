@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_backup_spark import artifacts
 from kafka_backup_spark import manifest as mani
 from kafka_backup_spark.offset_reset import generate_group_plan, import_group_snapshot, plan_summary
 from kafka_backup_spark.operators import projections
@@ -617,8 +618,6 @@ WHERE prev_offset IS NOT NULL AND "offset" > prev_offset + 1
 # compaction are session-scoped fixtures like header_roundtrip's segment
 # materialization; min-of-N reports the warm query cost by design.
 
-_SEG_BUCKETED: dict[tuple[str, str], str] = {}
-
 
 def _reraise(exc: OSError) -> None:
     raise exc
@@ -667,7 +666,14 @@ def _segments_bucketed(spark: SparkSession, sf_dir: str) -> str:
     fingerprint (not just the path), and a write is only trusted when its
     completion marker exists — a regenerated dataset or a crashed prior
     write triggers a clean rebuild instead of silently compacting stale or
-    torn data (ADVICE r14 #1)."""
+    torn data (ADVICE r14 #1).  The table name is a session artifact of
+    kind ``segments``."""
+    return artifacts.get_or_build(
+        spark, "segments", sf_dir, lambda: _build_segments_bucketed(spark, sf_dir)
+    )
+
+
+def _build_segments_bucketed(spark: SparkSession, sf_dir: str) -> str:
     import hashlib
     import os
     import shutil
@@ -676,11 +682,6 @@ def _segments_bucketed(spark: SparkSession, sf_dir: str) -> str:
     from kafka_backup_spark.sources.segments import SegmentStore
 
     app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if key in _SEG_BUCKETED:
-        return _SEG_BUCKETED[key]
-    for k in [k for k in _SEG_BUCKETED if k[0] != app]:
-        _SEG_BUCKETED.pop(k, None)
     fp = _source_fingerprint(sf_dir)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     table = f"segments_q{tag}_{fp[:6]}_b"
@@ -694,7 +695,6 @@ def _segments_bucketed(spark: SparkSession, sf_dir: str) -> str:
         with open(marker, "w") as f:
             f.write(fp)
     store.compact_bucketed(spark, table=table)
-    _SEG_BUCKETED[key] = table
     return table
 
 

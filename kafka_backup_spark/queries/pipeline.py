@@ -17,14 +17,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-# view-registration memo: re-reading the parquet footer and re-registering
-# an identical temp view per catalog call costs ~60-80 ms of driver RPC per
-# table (q5 touches six) for a no-op.  Key on (app, name); value is the
-# plain sf_dir string for plain views, or the structured tuple
-# ("bucketed", alias, sf_dir) for layout-served views — only re-register
-# when the binding actually changes.
-_VIEWS: dict[tuple[str, str], str | tuple] = {}
+from kafka_backup_spark import artifacts
 
 
 def _docs_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,11 +48,6 @@ _VIEW_PARTS = {
 }
 
 
-# bucketed-layout manifest memo: one JSON read + tableExists probe per
-# (app, root), not per catalog call
-_LAYOUTS: dict[tuple[str, str], dict | None] = {}
-
-
 def _bucketed_layout(spark: SparkSession) -> dict | None:
     """The session's registered bucketed fact layout (queries/layout.py),
     or None.  Opt-in via ``spark.kafkaBackupSpark.bucketedLayout`` (set
@@ -67,20 +55,17 @@ def _bucketed_layout(spark: SparkSession) -> dict | None:
     layout is a MATERIALIZED artifact like the reference's
     partition-aligned segments — built once at ingest/compaction time,
     then every orderkey join/rollup/window reads it shuffle-free.
-    Toggling the conf mid-session requires catalog.release_plan_cache
-    (cached plans hold the layout they were built against)."""
+    The manifest is read once per (session, root); toggling the conf
+    mid-session requires artifacts.release(spark) (cached plans hold the
+    layout they were built against)."""
     root = spark.conf.get("spark.kafkaBackupSpark.bucketedLayout", "")
     if not root:
         return None
     from kafka_backup_spark.queries import layout as _layout
 
-    app = spark.sparkContext.applicationId
-    key = (app, root)
-    if key not in _LAYOUTS:
-        for k in [k for k in _LAYOUTS if k[0] != app]:
-            _LAYOUTS.pop(k, None)
-        _LAYOUTS[key] = _layout.register_bucketed(spark, root)
-    return _LAYOUTS[key]
+    return artifacts.get_or_build(
+        spark, "layout", root, lambda: _layout.register_bucketed(spark, root)
+    )
 
 
 def _fp_sidecar(spark: SparkSession, sf_dir: str) -> str | None:
@@ -105,18 +90,22 @@ def _view(spark: SparkSession, sf_dir: str, *names: str, bucketed: tuple = ()) -
     because the bucketed catalog table's size estimate can fall under the
     broadcast threshold where the plain view's doesn't, and a STATIC
     broadcast of a 15M-row fact (which AQE cannot revert) costs ~10 s
-    (integrated_layout_probe.py, q7/q9/q10 first wave).
+    (SCALE.md "Integrated layout A/B at sf10", q7/q9/q10 first wave).
 
     A ``bucketed`` entry is either a plain table name (the default
     "orderkey" family) or ``"table@family"`` (e.g. ``"orders@custkey"``
     serves the view ``orders`` from the custkey-bucketed copy — layout.py
     FAMILIES), so one view name can bind to whichever co-partitioning the
-    query's join keys need."""
+    query's join keys need.
+
+    Each registration is a session artifact of kind ``view`` whose value
+    is the binding: the plain sf_dir, or ("bucketed", alias, sf_dir).  A
+    view is re-registered only when its binding changes — re-reading the
+    footer and re-registering an identical view costs ~60-80 ms of driver
+    RPC per table (q5 touches six)."""
     from kafka_backup_spark.queries.common import hot_table, small_table
 
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _VIEWS if k[0] != app]:
-        _VIEWS.pop(k, None)  # entries left by dead sessions
+    bound = artifacts.entries(spark, "view")
     bl = _bucketed_layout(spark) if bucketed else None
     for n in names:
         # serve the bucketed catalog table when the layout covers THIS
@@ -131,19 +120,20 @@ def _view(spark: SparkSession, sf_dir: str, *names: str, bucketed: tuple = ()) -
             if alias is not None and bl is not None and bl.get("sf_dir") == sf_dir
             else None
         )
-        if spec is not None:
-            # memo value is a structured tuple, not a delimited string — an
-            # sf_dir containing ':' can't confuse the comparison (ADVICE r12)
-            if _VIEWS.get((app, n)) != ("bucketed", alias, sf_dir):
-                spark.table(spec["name"]).createOrReplaceTempView(n)
-                _VIEWS[(app, n)] = ("bucketed", alias, sf_dir)
+        # a structured tuple, not a delimited string — an sf_dir
+        # containing ':' can't confuse the comparison (ADVICE r12)
+        binding = ("bucketed", alias, sf_dir) if spec is not None else sf_dir
+        if bound.get(n) == binding:
             continue
-        if _VIEWS.get((app, n)) != sf_dir:
+        if spec is not None:
+            df = spark.table(spec["name"])
+        else:
             df = hot_table(spark, sf_dir, n)
             if small_table(sf_dir, n):  # pinned → right-size the task count
                 df = df.coalesce(_VIEW_PARTS.get(n, 8))
-            df.createOrReplaceTempView(n)
-            _VIEWS[(app, n)] = sf_dir
+        artifacts.release(spark, "view", n)
+        df.createOrReplaceTempView(n)
+        artifacts.get_or_build(spark, "view", n, lambda b=binding: b)
 
 
 # Footprint gate for the AQE-crossover opt-ins (r12 sf1 sweep, min-of-6
@@ -170,25 +160,24 @@ def _view(spark: SparkSession, sf_dir: str, *names: str, bucketed: tuple = ()) -
 # is pure win.  At 100 TB the gate is always open; it exists so the same
 # code serves a 100 MB dev slice without regressing it.
 _ORDERKEY_GATE_BYTES = 256 << 20
-_GATE_MEMO: dict[str, bool] = {}
 
 
-def _gated_orderkey(sf_dir: str, *names: str) -> tuple:
+def _gated_orderkey(spark: SparkSession, sf_dir: str, *names: str) -> tuple:
     """The orderkey-family opt-in tuple when ``sf_dir``'s lineitem is past
-    the AQE-crossover gate, else () (plain views).  Unstatable paths
-    (object stores) are treated as at-scale — the gate is a small-input
-    concession, not a capability flag."""
-    from kafka_backup_spark.queries.common import _dataset_bytes
+    the AQE-crossover gate, else () (plain views); decided once per
+    (session, sf_dir).  Object-store and ``file://`` paths are sized like
+    local ones (fsio.dataset_bytes); a path that cannot be sized is
+    treated as at-scale — the gate is a small-input concession, not a
+    capability flag."""
+    from kafka_backup_spark import fsio
 
-    if sf_dir not in _GATE_MEMO:
+    def past_gate() -> bool:
         try:
-            _GATE_MEMO[sf_dir] = (
-                _dataset_bytes(f"{sf_dir}/lineitem.parquet")
-                >= _ORDERKEY_GATE_BYTES
-            )
+            return fsio.dataset_bytes(f"{sf_dir}/lineitem.parquet") >= _ORDERKEY_GATE_BYTES
         except OSError:
-            _GATE_MEMO[sf_dir] = True
-    return names if _GATE_MEMO[sf_dir] else ()
+            return True
+
+    return names if artifacts.get_or_build(spark, "gate", sf_dir, past_gate) else ()
 
 
 def _is_bucketed_view(spark: SparkSession, name: str, sf_dir: str) -> bool:
@@ -196,8 +185,7 @@ def _is_bucketed_view(spark: SparkSession, name: str, sf_dir: str) -> bool:
     sf_dir (any family) — the gate for layout-conditional plan choices
     (e.g. q21's co-located SHUFFLE_HASH, which only beats the SMJ when the
     exchange is already gone)."""
-    app = spark.sparkContext.applicationId
-    v = _VIEWS.get((app, name))
+    v = artifacts.entries(spark, "view").get(name)
     return isinstance(v, tuple) and v[0] == "bucketed" and v[2] == sf_dir
 
 
@@ -338,15 +326,12 @@ def _parquet_footer_stats(path: str, *columns: str):
     return rows, maxes, mins
 
 
-_MONEY_MODE: dict[tuple[str, str], bool] = {}
-_MONEY_BOUNDS: dict[str, dict | None] = {}
-
-
-def _money_bounds(sf_dir: str) -> dict | None:
+def _money_bounds(spark: SparkSession, sf_dir: str) -> dict | None:
     """Per-EXPRESSION worst-case per-row magnitudes (in 1e-6-dollar units)
-    derived from parquet footer min/max, plus the row count — cached per
-    sf_dir.  None when any footer statistic is missing (object stores,
-    stats-less writers): callers fall back to the scale-safe hi/lo path.
+    derived from parquet footer min/max, plus the row count — read once
+    per (session, sf_dir).  None when any footer statistic is missing
+    (object stores, stats-less writers): callers fall back to the
+    scale-safe hi/lo path.
 
     Kinds (VERDICT r13 #5 — the r13 gate applied ONE family-worst bound,
     Q1's triple product, to every aggregate; at sf10 that blocked
@@ -359,8 +344,12 @@ def _money_bounds(sf_dir: str) -> dict | None:
     - ``charge``: pc·(100−dc)·(100+tc)           (q1's charge column)
     - ``q9``:     |pc·(100−dc) − rp·qc|          (mixed-sign profit)
     - ``worst``:  max of all (the r13 family-wide behavior, the default)"""
-    if sf_dir in _MONEY_BOUNDS:
-        return _MONEY_BOUNDS[sf_dir]
+    return artifacts.get_or_build(
+        spark, "money-bounds", sf_dir, lambda: _footer_money_bounds(sf_dir)
+    )
+
+
+def _footer_money_bounds(sf_dir: str) -> dict | None:
     out = None
     try:
         li = _parquet_footer_stats(
@@ -397,19 +386,18 @@ def _money_bounds(sf_dir: str) -> dict | None:
             out = {"rows": rows, "bounds": bounds}
     except Exception:
         out = None  # unreadable footers → scale-safe path
-    _MONEY_BOUNDS[sf_dir] = out
     return out
 
 
 def _money_single(spark: SparkSession, sf_dir: str, kind: str = "worst") -> bool:
     """True when a single BIGINT accumulator is provably parity-safe for
     money aggregates of per-row shape ``kind`` on this dataset (see the
-    mode comment above and _money_bounds).  Data-keyed cache: the decision
-    depends only on the files.  Any missing statistic disables single
-    mode — the hi/lo split is always correct, just slower.  Mixed modes
-    within one query are sound: each aggregate's (hi, lo) reconstruction
-    is independent, so e.g. q1 runs its revenue sums single while its
-    charge column stays hi/lo."""
+    mode comment above and _money_bounds).  Decided once per (session,
+    sf_dir, kind): the decision depends only on the files.  Any missing
+    statistic disables single mode — the hi/lo split is always correct,
+    just slower.  Mixed modes within one query are sound: each
+    aggregate's (hi, lo) reconstruction is independent, so e.g. q1 runs
+    its revenue sums single while its charge column stays hi/lo."""
     mode = ""
     try:
         mode = str(spark.conf.get("spark.kafkaBackupSpark.moneyMode", "auto"))
@@ -419,12 +407,11 @@ def _money_single(spark: SparkSession, sf_dir: str, kind: str = "worst") -> bool
         return True
     if mode == "hilo":
         return False
-    key = (sf_dir, kind)
-    if key in _MONEY_MODE:
-        return _MONEY_MODE[key]
-    single = False
-    mb = _money_bounds(sf_dir)
-    if mb is not None:
+
+    def decide() -> bool:
+        mb = _money_bounds(spark, sf_dir)
+        if mb is None:
+            return False
         # 2^59, not 2^62 (ADVICE r9 #1): the oracle always reconstructs
         # hi·1e6 + lo in doubles, and that expression is the correctly
         # rounded double of the exact integer total only while
@@ -434,12 +421,9 @@ def _money_single(spark: SparkSession, sf_dir: str, kind: str = "worst") -> bool
         # 0·1e6 + total and the oracle's hi·1e6 + lo are both the
         # correctly-rounded double of the same integer — bit-identical.
         rows = mb["rows"]
-        single = (
-            rows * mb["bounds"][kind] < float(2**59)
-            and rows * 1e6 < float(2**53)
-        )
-    _MONEY_MODE[key] = single
-    return single
+        return rows * mb["bounds"][kind] < float(2**59) and rows * 1e6 < float(2**53)
+
+    return artifacts.get_or_build(spark, "money-mode", (sf_dir, kind), decide)
 
 
 _Q1_BODY = """
@@ -480,7 +464,7 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is already spread+pinned (common.hot_table), so the fixed-point agg
     # parallelizes without a per-query exchange; at 100 TB the table exceeds
     # the pin gate and the scan's own splits provide the parallelism.
-    _view(spark, sf_dir, "lineitem", bucketed=_gated_orderkey(sf_dir, "lineitem"))
+    _view(spark, sf_dir, "lineitem", bucketed=_gated_orderkey(spark, sf_dir, "lineitem"))
     # per-expression gating (VERDICT r13 #5): the revenue sums admit
     # single-sum ~100× earlier than the triple-product charge column, so
     # each aggregate carries its own proof — at sf10 rev runs single while
@@ -571,7 +555,7 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     q21's, in the opposite direction: plain views keep r9's
     SHUFFLE_HASH(li) (it removed the SMJ sorts that storage now
     provides); bucketed views drop it."""
-    _view(spark, sf_dir, "customer", "orders", "lineitem", bucketed=_gated_orderkey(sf_dir, "lineitem", "orders"))
+    _view(spark, sf_dir, "customer", "orders", "lineitem", bucketed=_gated_orderkey(spark, sf_dir, "lineitem", "orders"))
     hint = (
         ""
         if _is_bucketed_view(spark, "lineitem", sf_dir)
@@ -680,7 +664,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     (queries/layout.py, opt-in below) removes it: +18.1% at sf10
     integrated.  The remaining floor is the 1.2 s JVM broadcast-probe of
     60M fact rows, which no layout or plan shape touches."""
-    _view(spark, sf_dir, "customer", "orders", "lineitem", "supplier", "nation", "region", bucketed=_gated_orderkey(sf_dir, "lineitem", "orders"))
+    _view(spark, sf_dir, "customer", "orders", "lineitem", "supplier", "nation", "region", bucketed=_gated_orderkey(spark, sf_dir, "lineitem", "orders"))
     rev = _money_sum(
         "pc * (100 - dc)", "rev_hi", "rev_lo", "div", _money_single(spark, sf_dir, "rev")
     )
@@ -742,7 +726,7 @@ FROM t
 
 
 def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "lineitem", bucketed=_gated_orderkey(sf_dir, "lineitem"))
+    _view(spark, sf_dir, "lineitem", bucketed=_gated_orderkey(spark, sf_dir, "lineitem"))
     return spark.sql(_cents_sql(
         _Q6_BODY.format(
             IDIV="div",
@@ -893,8 +877,8 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     precondition (<10 of the top-100 qty orders survive the FK joins) is
     a data-corruption regime, not a plan hazard.
 
-    r15 symmetric-protocol floor (VERDICT r14 #3, sym_floor_probe.py,
-    SCALE.md r15): against DuckDB reading the SAME orderkey-sorted
+    r15 symmetric-protocol floor (VERDICT r14 #3, SCALE.md "Round-15: the
+    symmetric-protocol sub-second floors"): against DuckDB reading the SAME orderkey-sorted
     bucketed copy, the residual 2.3× gap is the rollup constant factor —
     Spark's HashAggregate holds ~500k orderkeys per task while DuckDB
     streams the sorted copy with no table, and Spark has no streaming
@@ -1318,7 +1302,7 @@ GROUP BY o_orderpriority
 
 
 def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "orders", "lineitem", bucketed=_gated_orderkey(sf_dir, "lineitem", "orders"))
+    _view(spark, sf_dir, "orders", "lineitem", bucketed=_gated_orderkey(spark, sf_dir, "lineitem", "orders"))
     return spark.sql(_cents_sql(_Q4_BODY))
 
 
@@ -2917,8 +2901,8 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exchange-free sidecar scan when served — VERDICT r13 #1 — else the
     r8-pinned single md5 pass), then the shared split rollup.
 
-    r15 symmetric-protocol floor (VERDICT r14 #3, sym_floor_probe.py,
-    SCALE.md r15): with DuckDB reading the SAME 24 MB sidecar the 0.24 s
+    r15 symmetric-protocol floor (VERDICT r14 #3, SCALE.md "Round-15: the
+    symmetric-protocol sub-second floors"): with DuckDB reading the SAME 24 MB sidecar the 0.24 s
     absolute is ~2.7× DuckDB's 0.07-0.09, and every partition-count
     lever LOSES — coalesce(1) 6× worse (serializes the scan+agg),
     coalesce(4) 2× worse, AQE already folds the ≤96-row exchange.  The
@@ -3016,7 +3000,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts either way at this scale; at 100 TB the early reduction is
     the difference between shuffling 8% of lineitem and all of it).
     Results equal; the ORACLE keeps the reference flat-join text."""
-    _view(spark, sf_dir, "supplier", "lineitem", "orders", "customer", "nation", bucketed=_gated_orderkey(sf_dir, "lineitem", "orders"))
+    _view(spark, sf_dir, "supplier", "lineitem", "orders", "customer", "nation", bucketed=_gated_orderkey(spark, sf_dir, "lineitem", "orders"))
     ohint = (
         "/*+ SHUFFLE_HASH(orders) */ "
         if _is_bucketed_view(spark, "orders", sf_dir)
@@ -3288,7 +3272,7 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     q5's."""
     _view(
         spark, sf_dir, "part", "supplier", "lineitem",
-        bucketed=_gated_orderkey(sf_dir, "lineitem@partkey"),
+        bucketed=_gated_orderkey(spark, sf_dir, "lineitem@partkey"),
     )
     pf = (
         spark.table("part")
@@ -3364,7 +3348,7 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-count scan cap)."""
     _view(
         spark, sf_dir, "part", "lineitem",
-        bucketed=_gated_orderkey(sf_dir, "lineitem@partkey"),
+        bucketed=_gated_orderkey(spark, sf_dir, "lineitem@partkey"),
     )
     return spark.sql(_cents_sql("""
 WITH pl AS (
@@ -3456,7 +3440,7 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     a wash vs shipped (−4.3%) but bucketed SHJ won +49.7% (3.92 → 1.97 s).
     Unbucketed keeps the hint off (r9 pinned plain SMJ→SHJ swaps as
     washes)."""
-    _view(spark, sf_dir, "supplier", "lineitem", "orders", bucketed=_gated_orderkey(sf_dir, "lineitem", "orders"))
+    _view(spark, sf_dir, "supplier", "lineitem", "orders", bucketed=_gated_orderkey(spark, sf_dir, "lineitem", "orders"))
     hint = (
         "/*+ SHUFFLE_HASH(orders) */ "
         if _is_bucketed_view(spark, "orders", sf_dir)

@@ -19,6 +19,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_backup_spark import artifacts
+
 MOD32 = 4_294_967_296  # 2^32
 
 
@@ -372,31 +374,6 @@ def _hashed_gram_sets(c: DataFrame) -> DataFrame:
     return _hashed_gram_arrays(c).select("doc_id", F.explode("hs").alias("h"))
 
 
-_GRAM_CACHE: dict[tuple[str, str], DataFrame] = {}
-_TAGGED: dict[tuple[str, str], DataFrame] = {}
-# registry bounds: 2 gram-stage frames per sf_dir (gram arrays + the sized
-# band table), 2 ANN index tags per sf_dir — room for ~4 concurrently-hot
-# sf_dirs before oldest-inserted entries unpersist (guards long-lived
-# many-directory sessions)
-_GRAM_CACHE_CAP = 8
-_ANN_INDEX_CAP = 8
-
-
-def _evict_oldest(store: dict, cap: int) -> None:
-    """Evict oldest-inserted entries (dict order) until below ``cap``,
-    unpersisting any DataFrame values (entries may be frames or dicts of
-    frames)."""
-    while len(store) >= cap:
-        old = store.pop(next(iter(store)))
-        vals = old.values() if isinstance(old, dict) else [old]
-        for v in vals:
-            if isinstance(v, DataFrame):
-                try:
-                    v.unpersist()
-                except Exception:
-                    pass
-
-
 def _tagged_persist(spark: SparkSession, tag: str, df: DataFrame) -> DataFrame:
     """Persist ``df``, releasing the handle the SAME query persisted on a
     previous call.  The ANN queries re-derive equivalent frames every call;
@@ -405,14 +382,8 @@ def _tagged_persist(spark: SparkSession, tag: str, df: DataFrame) -> DataFrame:
     the shared gram cache, the frame is NOT reused across calls — each call
     recomputes honestly (k-means state differs per invocation lifecycle);
     only the storage handle lifecycle is managed."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _TAGGED if k[0] != app]:
-        _TAGGED.pop(k, None)  # drop handles left by dead sessions
-    old = _TAGGED.pop((app, tag), None)
-    if old is not None:
-        old.unpersist()
-    _TAGGED[(app, tag)] = df.persist()
-    return df
+    artifacts.release(spark, "tagged", tag)
+    return artifacts.get_or_build(spark, "tagged", tag, df.persist)
 
 
 def _shared_gram_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -423,55 +394,11 @@ def _shared_gram_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     warnings) and (b) bounds pinned executor storage to one copy instead of
     one per query.  The frame is one row per doc of 8-byte hash arrays —
     MEMORY_AND_DISK default, so at scale it spills rather than evicting.
-    ``release_gram_cache`` frees it explicitly.
-
-    Staleness contract: the cache is keyed on (session, sf_dir) with NO
-    file-modification check — parquet under a queried sf_dir is treated as
-    immutable for the session's lifetime (true for the testdata tiers and
-    for any sanely-versioned corpus layout, where rewrites land in NEW
-    version directories).  A writer that mutates files under sf_dir in
-    place must call ``release_gram_cache(spark)`` afterwards, or
-    lsh_candidates / near_dup_pipeline keep serving the pre-mutation gram
-    arrays."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _GRAM_CACHE if k[0] != app]:
-        _GRAM_CACHE.pop(k, None)  # drop handles left by dead sessions
-    key = (app, sf_dir)
-    if key not in _GRAM_CACHE:
-        _evict_oldest(_GRAM_CACHE, _GRAM_CACHE_CAP)
-        _GRAM_CACHE[key] = _hashed_gram_arrays(_near_corpus(spark, sf_dir)).cache()
-    return _GRAM_CACHE[key]
-
-
-def release_gram_cache(spark: SparkSession | None = None) -> None:
-    """Unpersist every frame this module pinned (one session's, or all):
-    the shared gram-array cache plus the tag-tracked ANN persists.  Handles
-    left by sessions that have since stopped are dropped without the
-    unpersist call — it would raise through the dead SparkContext."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    for store in (_GRAM_CACHE, _TAGGED):
-        for k in list(store):
-            if app is None or k[0] == app:
-                df = store.pop(k)
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass  # session already stopped; nothing left to free
-    for k in list(_ANN_INDEX):
-        if app is None or k[0] == app:
-            entry = _ANN_INDEX.pop(k)
-            for v in entry.values():
-                if isinstance(v, DataFrame):
-                    try:
-                        v.unpersist()
-                    except Exception:
-                        pass
-    # cached plans may reference the frames just unpersisted: results would
-    # still be correct (Spark recomputes), but a stale plan silently skips
-    # the index/gram REBUILD the releaser asked for — drop them together
-    from kafka_backup_spark import catalog
-
-    catalog.release_plan_cache(spark)
+    It is a session artifact of kind ``gram``."""
+    return artifacts.get_or_build(
+        spark, "gram", ("arrays", sf_dir),
+        lambda: _hashed_gram_arrays(_near_corpus(spark, sf_dir)).cache(),
+    )
 
 
 _GRAMS_CTE = """
@@ -749,12 +676,8 @@ def _icsim(x: Column, y: Column, prec: int) -> Column:
 # the assignment UDF on every invocation.  The build is fully deterministic
 # (md5-ordered seeds, integer Lloyd sums), so cached results are
 # bit-identical to a fresh build.  Driver state stays bounded at k=√n
-# centroid rows; the persisted frames spill under MEMORY_AND_DISK.
-#
-# Staleness contract: same as _shared_gram_arrays — sf_dir is immutable for
-# the session; in-place writers call release_gram_cache(spark), which clears
-# this registry too.
-_ANN_INDEX: dict[tuple[str, str], dict] = {}
+# centroid rows; the persisted frames spill under MEMORY_AND_DISK.  Each
+# index is a session artifact of kind ``ann``.
 
 
 def _shared_ann_index(
@@ -762,24 +685,19 @@ def _shared_ann_index(
 ) -> dict:
     """Return {'corpus': DataFrame, 'cells': list, 'cent_mat': list} for
     ``tag``, building (and persisting) it on first use."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _ANN_INDEX if k[0] != app]:
-        _ANN_INDEX.pop(k, None)  # drop entries left by dead sessions
-    key = (app, tag)
-    if key not in _ANN_INDEX:
-        _evict_oldest(_ANN_INDEX, _ANN_INDEX_CAP)
+
+    def build() -> dict:
         corpus = build_corpus().persist()
-        k_cells = math.ceil(math.sqrt(n))
-        cells, cent_mat = _kmeans_cells(corpus, dim, k_cells)
-        _ANN_INDEX[key] = {"corpus": corpus, "cells": cells, "cent_mat": cent_mat}
-    return _ANN_INDEX[key]
+        cells, cent_mat = _kmeans_cells(corpus, dim, math.ceil(math.sqrt(n)))
+        return {"corpus": corpus, "cells": cells, "cent_mat": cent_mat}
+
+    return artifacts.get_or_build(spark, "ann", tag, build)
 
 
 def _ann_index_frame(spark: SparkSession, tag: str, kind: str, build) -> DataFrame:
     """Persisted per-index derived frame (cell membership / neighbor lists),
     cached alongside the quantizer under the same registry entry."""
-    app = spark.sparkContext.applicationId
-    entry = _ANN_INDEX[(app, tag)]
+    entry = artifacts.entries(spark, "ann")[tag]
     if kind not in entry:
         entry[kind] = build().persist()
     return entry[kind]
@@ -868,8 +786,8 @@ def _score_pairs(
     call sites.  The pandas path materialized every array<bigint> cell as
     a Python list (Series-of-objects → ``tolist()`` → ``np.array``) —
     per-element Python object churn that dominated the pair stage
-    (embdup_probe.py: the scoring fragment was +1.20 s of a 1.23 s query
-    at sf0.1).  Arrow's list layout is one contiguous int64 values buffer
+    (OPTIMIZATION_r15.md §1 stage table: the scoring fragment was +1.20 s
+    of a 1.23 s query at sf0.1).  Arrow's list layout is one contiguous int64 values buffer
     plus offsets, so the batch reshapes ZERO-COPY into an (n, dim) matrix
     and the whole score is three numpy reductions — identical float64
     ops in identical order to the pandas scorer (exactness argument in
@@ -1162,7 +1080,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # attach joins + a pandas-UDF scorer that the optimizer planned TWICE
     # (threshold filter on the UDF column → re-eval below the pushed
     # filter); an asNondeterministic pin took it to single-eval (1.117 →
-    # 1.047 s, embdup_ab.py), a fused mapInArrow scorer retired the
+    # 1.047 s, OPTIMIZATION_r15.md §1), a fused mapInArrow scorer retired the
     # double-eval hazard structurally (1.408 s min on the final A/B box).
     # The shipped shape goes further and deletes the pair join itself:
     # group the (vec_id, qe) members by probe cell and GENERATE the a<b
@@ -1174,7 +1092,8 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # survivor set (a pair sharing both probe cells scores identically in
     # both groups — same float64 op sequence on the same rows — so the
     # post-distinct is exact).  A/B at sf0.1: 1.408 → 0.522 s min-of-8
-    # interleaved, parity hash identical (embdup_cell_ab.py).
+    # interleaved, parity hash identical (OPTIMIZATION_r15.md §1; 133.2 →
+    # 14.2 s at sf10 in OPTIMIZATION_r16.md §3).
     mm = member.join(corpus, "vec_id").select("cell", "vec_id", "qe")
     scored = mm.groupBy("cell").applyInArrow(
         _cell_pairs_fn(4, COSINE_DUP_THRESHOLD),
@@ -1263,20 +1182,19 @@ def _shared_band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join, not the interpreted seeded-min lambdas over the cached gram
     frame, dominates); at corpus scale the ~N_SEEDS×|grams| lambda evals
     per document amortize across every consumer instead of re-running.
-    Staleness/release contract: ``_shared_gram_arrays``."""
-    app = spark.sparkContext.applicationId
-    key = (app, f"bands:{sf_dir}")
-    if key not in _GRAM_CACHE:
-        _evict_oldest(_GRAM_CACHE, _GRAM_CACHE_CAP)
+    It is a session artifact of kind ``gram``, like the gram arrays."""
+
+    def build() -> DataFrame:
         # persist the SIZED band table (one `_n` long per row): bucket sizes
         # are computed exactly once per (session, sf_dir), the bucket cap
         # becomes a pure filter inside every consumer's plan, and the
         # over-cap warning runs here — once, over the just-persisted frame —
         # instead of as an eager job inside plan construction (ADVICE r8 #3)
         sized = _sized_bands(_band_table(_shared_gram_arrays(spark, sf_dir))).persist()
-        _GRAM_CACHE[key] = sized
         _warn_over_cap(sized, _lsh_bucket_cap(spark))
-    return _GRAM_CACHE[key]
+        return sized
+
+    return artifacts.get_or_build(spark, "gram", ("bands", sf_dir), build)
 
 
 def _lsh_bucket_cap(spark: SparkSession | None) -> int:

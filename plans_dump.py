@@ -19,7 +19,7 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from kafka_backup_spark import catalog
+from kafka_backup_spark import artifacts, catalog
 from kafka_backup_spark.session import autosize_shuffle_partitions, get_spark
 
 
@@ -51,7 +51,7 @@ def main() -> int:
             "tables", {}
         ):
             _layout.materialize_fingerprints(spark, sf_dir, root)
-            catalog.release_plan_cache(spark)
+            artifacts.release(spark)
 
     qs = catalog.queries()
     for name in names:

@@ -44,7 +44,7 @@ N = int(os.environ.get("PROBE_REPEATS", "6"))
 def fragments(spark, sf_dir):
     _view(
         spark, sf_dir, "part", "supplier", "lineitem",
-        bucketed=_gated_orderkey(sf_dir, "lineitem@partkey"),
+        bucketed=_gated_orderkey(spark, sf_dir, "lineitem@partkey"),
     )
     pf = (
         spark.table("part")

@@ -79,7 +79,7 @@ def main():
     def v_pre():
         _view(
             spark, DERIVED, "part", "supplier", "lineitem",
-            bucketed=_gated_orderkey(DERIVED, "lineitem@partkey"),
+            bucketed=_gated_orderkey(spark, DERIVED, "lineitem@partkey"),
         )
         pf = (
             spark.table("part")

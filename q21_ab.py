@@ -63,7 +63,7 @@ def noop(df) -> None:
 def build_v_agg(spark, sf_dir):
     _view(
         spark, sf_dir, "supplier", "lineitem", "orders",
-        bucketed=_gated_orderkey(sf_dir, "lineitem", "orders"),
+        bucketed=_gated_orderkey(spark, sf_dir, "lineitem", "orders"),
     )
     hint = (
         "/*+ SHUFFLE_HASH(orders) */ "

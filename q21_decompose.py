@@ -50,7 +50,7 @@ def main() -> int:
 
     _view(
         spark, sf_dir, "supplier", "lineitem", "orders",
-        bucketed=_gated_orderkey(sf_dir, "lineitem", "orders"),
+        bucketed=_gated_orderkey(spark, sf_dir, "lineitem", "orders"),
     )
     hint = (
         "/*+ SHUFFLE_HASH(orders) */ "

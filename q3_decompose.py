@@ -49,7 +49,7 @@ _LI = """
 def fragments(spark, sf_dir):
     _view(
         spark, sf_dir, "customer", "orders", "lineitem",
-        bucketed=_gated_orderkey(sf_dir, "lineitem", "orders"),
+        bucketed=_gated_orderkey(spark, sf_dir, "lineitem", "orders"),
     )
     rev = _money_sum("pc * (100 - dc)", "rev_hi", "rev_lo", "div", _money_single(spark, sf_dir))
     sql = lambda s: spark.sql(_cents_sql(s))  # noqa: E731

@@ -158,8 +158,8 @@ def main() -> int:
     # arrays, ANN index, corpus persists), SQL-UI execution graphs, and
     # codegen/broadcast remnants squeezing unified memory until one 10M-row
     # build OOMs.  Every HYGIENE_EVERY attempted queries, release every
-    # module-pinned frame (release_gram_cache also drops the plan cache —
-    # results recompute, bit-identical) and clear the block-manager cache.
+    # session artifact (plans, pins, gram and ANN indexes; each rebuilds on
+    # next use, bit-identical) and then clear whatever else is cached.
     # Only active on scale overrides; the sf0.01 driver-mimic stays bare.
     hygiene_every = int(os.environ.get("SPARK_GRAFT_SELF_HYGIENE", "12"))
     scale_run = bool(os.environ.get("SPARK_GRAFT_SELF_SF_DIR"))
@@ -172,9 +172,9 @@ def main() -> int:
             print(f"SKIP {name}: excluded via SPARK_GRAFT_SELF_SKIP (scale exemption)")
             continue
         if scale_run and attempted and attempted % hygiene_every == 0:
-            from kafka_backup_spark.queries.textops import release_gram_cache
+            from kafka_backup_spark import artifacts
 
-            release_gram_cache(spark)
+            artifacts.release(spark)
             spark.catalog.clearCache()
         attempted += 1
         try:

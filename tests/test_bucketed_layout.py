@@ -43,22 +43,18 @@ def _layout_enabled(spark, root: str):
     plan cache and view memo hold whichever layout they were built on).
     Forces the AQE-crossover footprint gate OPEN so the gated queries
     (q1/q3/q4/q5/q6/q7/q21) exercise their bucketed path at test scale."""
-    from kafka_backup_spark.catalog import release_plan_cache
+    from kafka_backup_spark import artifacts
 
     gate = pipeline._ORDERKEY_GATE_BYTES
     pipeline._ORDERKEY_GATE_BYTES = 0
-    pipeline._GATE_MEMO.clear()
     spark.conf.set("spark.kafkaBackupSpark.bucketedLayout", root)
-    release_plan_cache(spark)
-    pipeline._LAYOUTS.clear()
+    artifacts.release(spark)
     try:
         yield
     finally:
         pipeline._ORDERKEY_GATE_BYTES = gate
-        pipeline._GATE_MEMO.clear()
         spark.conf.unset("spark.kafkaBackupSpark.bucketedLayout")
-        release_plan_cache(spark)
-        pipeline._LAYOUTS.clear()
+        artifacts.release(spark)
         for t in (
             "lineitem_b",
             "orders_b",
@@ -176,12 +172,10 @@ def test_footprint_gate_serves_plain_below_threshold(spark, sf_dir, bucketed_roo
     gate (any test fixture is), the gated queries bind plain views — the
     measured sf1 regression regime (AQE's runtime broadcast beats
     co-location on small facts) must not be re-entered by default."""
-    from kafka_backup_spark.catalog import release_plan_cache
+    from kafka_backup_spark import artifacts
 
     spark.conf.set("spark.kafkaBackupSpark.bucketedLayout", bucketed_root)
-    release_plan_cache(spark)
-    pipeline._LAYOUTS.clear()
-    pipeline._GATE_MEMO.clear()
+    artifacts.release(spark)
     try:
         p5 = _plan(q_tpch_q5(spark, sf_dir))
         assert "lineitem_b" not in p5 and "orders_b" not in p5
@@ -191,9 +185,7 @@ def test_footprint_gate_serves_plain_below_threshold(spark, sf_dir, bucketed_roo
         assert "lineitem_b" in p18
     finally:
         spark.conf.unset("spark.kafkaBackupSpark.bucketedLayout")
-        release_plan_cache(spark)
-        pipeline._LAYOUTS.clear()
-        pipeline._GATE_MEMO.clear()
+        artifacts.release(spark)
         for t in (
             "lineitem_b", "orders_b", "orders_custkey_b",
             "customer_custkey_b", "lineitem_partkey_b",
@@ -623,15 +615,15 @@ def test_fp_alt_oracle_sql_matches_standard(spark, sf_dir, tmp_path):
 
 def test_segment_store_rebuilds_after_data_regeneration(spark, tmp_path):
     """ADVICE r14 #1: regenerating a dataset at the SAME sf_dir and
-    releasing the plan cache must land segment_rollup_bucketed on a fresh
+    releasing the session artifacts must land segment_rollup_bucketed on a fresh
     compacted store (fingerprint-keyed path), not the stale one; a torn
     prior write (store dir present, completion marker absent) must be
     rebuilt, not compacted."""
     import os
     import shutil
 
+    from kafka_backup_spark import artifacts
     from kafka_backup_spark.queries import extra
-    from kafka_backup_spark.queries.common import release_meta_cache
 
     sf = str(tmp_path / "sf")
     os.makedirs(sf)
@@ -648,7 +640,7 @@ def test_segment_store_rebuilds_after_data_regeneration(spark, tmp_path):
 
     os.remove(f"{sf}/events.parquet")
     pq.write_table(half, f"{sf}/events.parquet")
-    release_meta_cache(spark)  # the documented in-place-writer entry point
+    artifacts.release(spark)  # the documented in-place-writer entry point
 
     n2 = extra.q_segment_rollup_bucketed(spark, sf).agg({"n_records": "sum"}).collect()[0][0]
     assert n2 < n1, (n1, n2)
@@ -661,7 +653,7 @@ def test_segment_store_rebuilds_after_data_regeneration(spark, tmp_path):
     root = os.path.join(tempfile.gettempdir(), f"kbs_segq_{fp}_{app}")
     assert os.path.isfile(os.path.join(root, "_KBS_STORE_COMPLETE"))
     os.remove(os.path.join(root, "_KBS_STORE_COMPLETE"))
-    release_meta_cache(spark)
+    artifacts.release(spark)
     n3 = extra.q_segment_rollup_bucketed(spark, sf).agg({"n_records": "sum"}).collect()[0][0]
     assert n3 == n2, (n2, n3)
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_backup_spark import catalog
+from kafka_backup_spark import artifacts, catalog
 from kafka_backup_spark.schema import events_as_records, load_table
 from kafka_backup_spark.sources.segments import SegmentStore
 
@@ -150,17 +150,16 @@ def test_tpch_streamed_scans_prune_lineitem_columns(spark, monkeypatch):
     lineitem scan's ReadSchema must exclude the wide columns the query
     doesn't touch — a scan reading all 11 lineitem columns for a 4-column
     query would multiply 100-TB scan bytes by ~3×."""
-    from kafka_backup_spark.queries import common, pipeline
+    from kafka_backup_spark.queries import common
 
     monkeypatch.setattr(common, "_HOT_TABLE_MAX_BYTES", 1)
-    # fresh views: the memo may hold pinned-path views from other tests
-    for k in [k for k in pipeline._VIEWS]:
-        pipeline._VIEWS.pop(k, None)
+    # fresh views and plans: the session may hold pinned-path ones from
+    # other tests
+    artifacts.release(spark)
     try:
         tpch = [n for n in catalog.ALL_QUERIES if n.startswith("tpch_")]
         assert len(tpch) >= 12
         qs = catalog.queries()
-        catalog.release_plan_cache(spark)
         for name in tpch:
             plan = _plan(qs[name](spark, "/root/testdata/sf0.001"))
             li_scans = [
@@ -177,9 +176,7 @@ def test_tpch_streamed_scans_prune_lineitem_columns(spark, monkeypatch):
                 if name in ("tpch_q1_pricing", "tpch_q6_forecast"):
                     assert "l_partkey" not in line, name
     finally:
-        for k in [k for k in pipeline._VIEWS]:
-            pipeline._VIEWS.pop(k, None)
-        catalog.release_plan_cache(spark)
+        artifacts.release(spark)
 
 
 def test_hashing_paths_have_no_python_udfs(spark):
@@ -529,42 +526,41 @@ def test_shared_meta_cache_single_entry_and_release(spark, sf_dir):
     from kafka_backup_spark import manifest as mani
     from kafka_backup_spark.queries import common
 
-    common.release_meta_cache()
+    artifacts.release()
     m1 = common.manifest_df(spark, sf_dir)
     m2 = common.manifest_df(spark, sf_dir)
     assert m1 is m2  # one shared frame, not one per call
-    app = spark.sparkContext.applicationId
-    # the records/table pins (hot_table, records_df) share this registry;
-    # the manifest must still be a single entry
-    keys = [k for k in common._META_CACHE if k[0] == app and k[2].startswith("manifest")]
-    assert keys == [(app, sf_dir, "manifest:1000")]
+    # the records/table pins (hot_table, records_df) share this kind; the
+    # manifest must still be a single entry
+    meta = artifacts.entries(spark, "meta")
+    assert [k for k in meta if k[1].startswith("manifest")] == [(sf_dir, "manifest:1000")]
     assert m1.rdd.getNumPartitions() == 1  # metadata = one partition
     fresh = mani.build_manifest(common.records_df(spark, sf_dir), 1000)
     assert sorted(map(tuple, m1.collect())) == sorted(map(tuple, fresh.collect()))
-    common.release_meta_cache(spark)
-    assert not [k for k in common._META_CACHE if k[0] == app]
+    artifacts.release(spark)
+    assert not artifacts.entries(spark, "meta")
     assert not m1.is_cached
 
 
 def test_meta_cache_bounded_eviction(spark, sf_dir):
-    """Registry cap: inserting past _META_CACHE_CAP evicts (and unpersists)
+    """Registry cap: inserting past the ``meta`` cap evicts (and unpersists)
     the oldest entry instead of pinning storage forever."""
     from kafka_backup_spark.queries import common
 
-    common.release_meta_cache()
+    artifacts.release()
+    cap = artifacts._CAPS["meta"]
     frames = {}
-    for i in range(common._META_CACHE_CAP + 3):
+    for i in range(cap + 3):
         kind = f"__evict_test_{i}"
         frames[kind] = common._shared_meta(
             spark, sf_dir, kind, lambda i=i: spark.range(i + 1)
         )
-    app = spark.sparkContext.applicationId
-    live = [k for k in common._META_CACHE if k[0] == app]
-    assert len(live) <= common._META_CACHE_CAP
-    assert (app, sf_dir, "__evict_test_0") not in common._META_CACHE  # oldest out
+    live = artifacts.entries(spark, "meta")
+    assert len(live) <= cap
+    assert (sf_dir, "__evict_test_0") not in live  # oldest out
     assert not frames["__evict_test_0"].is_cached  # and unpersisted
-    assert frames[f"__evict_test_{common._META_CACHE_CAP + 2}"].is_cached
-    common.release_meta_cache(spark)
+    assert frames[f"__evict_test_{cap + 2}"].is_cached
+    artifacts.release(spark)
 
 
 def test_hot_table_size_gate_streams_large_tables(spark, sf_dir, monkeypatch):
@@ -574,24 +570,23 @@ def test_hot_table_size_gate_streams_large_tables(spark, sf_dir, monkeypatch):
     that size."""
     from kafka_backup_spark.queries import common
 
-    common.release_meta_cache(spark)
-    app = spark.sparkContext.applicationId
+    artifacts.release(spark)
 
     pinned = common.hot_table(spark, sf_dir, "documents")
-    assert (app, sf_dir, "table:documents") in common._META_CACHE
+    assert (sf_dir, "table:documents") in artifacts.entries(spark, "meta")
     assert "InMemoryRelation" in pinned._jdf.queryExecution().optimizedPlan().toString()
 
-    common.release_meta_cache(spark)
+    artifacts.release(spark)
     monkeypatch.setattr(common, "_HOT_TABLE_MAX_BYTES", 1)  # everything is big now
     streamed = common.hot_table(spark, sf_dir, "documents")
-    assert (app, sf_dir, "table:documents") not in common._META_CACHE
+    assert (sf_dir, "table:documents") not in artifacts.entries(spark, "meta")
     plan = streamed._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" not in plan and "Relation" in plan
     # records_df honors the same gate: over-gate events stream uncached
     r = common.records_df(spark, sf_dir)
-    assert (app, sf_dir, "records") not in common._META_CACHE
+    assert (sf_dir, "records") not in artifacts.entries(spark, "meta")
     assert "InMemoryRelation" not in r._jdf.queryExecution().optimizedPlan().toString()
-    common.release_meta_cache(spark)
+    artifacts.release(spark)
 
 
 def test_pin_partitions_scale_with_table_size(spark, sf_dir):
@@ -611,10 +606,10 @@ def test_pin_partitions_scale_with_table_size(spark, sf_dir):
     want = -(-(11 << 20) // per_part)  # lineitem @ sf0.1, ceil division
     assert common.spread_parts(spark, 11 << 20) == min(dp, max(8, want))
     assert common.spread_parts(spark, 1 << 30) == dp       # capped
-    common.release_meta_cache(spark)
+    artifacts.release(spark)
     docs = common.hot_table(spark, sf_dir, "documents")
     assert docs.rdd.getNumPartitions() == floor
-    common.release_meta_cache(spark)
+    artifacts.release(spark)
 
 
 def test_plan_cache_serves_same_dataframe_and_releases(spark, sf_dir):
@@ -627,40 +622,51 @@ def test_plan_cache_serves_same_dataframe_and_releases(spark, sf_dir):
     assert a is b
     other = q1(spark, "/root/testdata/sf0.01")
     assert other is not a  # keyed by sf_dir
-    catalog.release_plan_cache(spark)
+    artifacts.release(spark)
     assert q1(spark, sf_dir) is not a
-    catalog.release_plan_cache(spark)
+    artifacts.release(spark)
 
 
 def test_hot_table_size_gate_measures_directory_datasets(spark, tmp_path, monkeypatch):
     """Spark writes parquet datasets as DIRECTORIES; os.path.getsize on a
     directory returns the ~4 KB inode, which would silently disarm the pin
     gate for every Spark-written table.  The gate must size the dataset
-    recursively and stream an over-gate directory dataset."""
+    recursively and stream an over-gate directory dataset.  A ``file://``
+    root is sized the same way and pins under the gate like a plain path."""
+    from kafka_backup_spark import fsio
     from kafka_backup_spark.queries import common
 
     out = str(tmp_path / "big.parquet")
     spark.range(2000).withColumn("pad", F.lit("x" * 64)).write.parquet(out)
-    assert common._dataset_bytes(out) > 4096  # not the inode size
+    size = fsio.dataset_bytes(out)
+    assert size > 4096  # not the inode size
+    assert fsio.dataset_bytes(f"file://{out}") == size
+    uri = f"file://{tmp_path}"
     monkeypatch.setattr(common, "_HOT_TABLE_MAX_BYTES", 4096)
-    streamed = common.hot_table(spark, str(tmp_path), "big")
-    app = spark.sparkContext.applicationId
-    assert (app, str(tmp_path), "table:big") not in common._META_CACHE
-    plan = streamed._jdf.queryExecution().optimizedPlan().toString()
-    assert "InMemoryRelation" not in plan
+    for root in (str(tmp_path), uri):
+        streamed = common.hot_table(spark, root, "big")
+        assert (root, "table:big") not in artifacts.entries(spark, "meta")
+        plan = streamed._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" not in plan
+    monkeypatch.setattr(common, "_HOT_TABLE_MAX_BYTES", size)
+    pinned = common.hot_table(spark, uri, "big")
+    assert (uri, "table:big") in artifacts.entries(spark, "meta")
+    assert "InMemoryRelation" in pinned._jdf.queryExecution().optimizedPlan().toString()
+    artifacts.release(spark)
 
 
-def test_release_plan_cache_drops_tpch_view_memo(spark, sf_dir):
+def test_release_drops_tpch_views(spark, sf_dir):
     """A temp view holds its own analyzed plan (file listing included), so
-    the release path must drop the TPC-H view memo together with the plan
+    release must drop the registered TPC-H views together with the plan
     cache — otherwise post-release queries would resolve stale views."""
-    from kafka_backup_spark.queries import pipeline
-
     catalog.queries()["tpch_q6_forecast"](spark, sf_dir)
-    app = spark.sparkContext.applicationId
-    assert any(k[0] == app for k in pipeline._VIEWS)
-    catalog.release_plan_cache(spark)
-    assert not [k for k in pipeline._VIEWS if k[0] == app]
+    assert "lineitem" in artifacts.entries(spark, "view")
+    artifacts.release(spark)
+    assert not artifacts.entries(spark, "view")
+    temp = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    assert "lineitem" not in temp
+    # and the query still works after release (views re-register)
+    assert catalog.queries()["tpch_q6_forecast"](spark, sf_dir).count() >= 0
     # and the query still works after release (views re-register)
     assert catalog.queries()["tpch_q6_forecast"](spark, sf_dir).count() >= 0
 
@@ -804,7 +810,7 @@ def test_money_modes_agree(spark):
     results = {}
     for mode in ("single", "hilo"):
         spark.conf.set("spark.kafkaBackupSpark.moneyMode", mode)
-        catalog.release_plan_cache(spark)
+        artifacts.release(spark)
         try:
             for n in names:
                 fn = catalog.queries()[n]
@@ -812,7 +818,7 @@ def test_money_modes_agree(spark):
                 results.setdefault(n, {})[mode] = rows
         finally:
             spark.conf.unset("spark.kafkaBackupSpark.moneyMode")
-    catalog.release_plan_cache(spark)
+    artifacts.release(spark)
     for n in names:
         assert results[n]["single"] == results[n]["hilo"], n
 
@@ -963,7 +969,7 @@ def test_money_gate_per_expression_kinds(spark, monkeypatch):
     from kafka_backup_spark.queries import pipeline
 
     sf = "/root/testdata/sf0.001"
-    bounds = pipeline._money_bounds(sf)
+    bounds = pipeline._money_bounds(spark, sf)
     assert bounds is not None
     b = bounds["bounds"]
     # ordering invariants on real footers: the triple product dominates
@@ -975,7 +981,11 @@ def test_money_gate_per_expression_kinds(spark, monkeypatch):
     # craft a boundary dataset: rows chosen so rows*rev < 2^59 ≤ rows*charge
     rows = int(float(2**59) / b["charge"]) + 1
     crafted = dict(bounds, rows=rows)
-    monkeypatch.setitem(pipeline._MONEY_BOUNDS, "/fake/boundary", crafted)
+    real = pipeline._footer_money_bounds
+    monkeypatch.setattr(
+        pipeline, "_footer_money_bounds",
+        lambda d: crafted if d == "/fake/boundary" else real(d),
+    )
     assert pipeline._money_single(spark, "/fake/boundary", "rev") is True
     assert pipeline._money_single(spark, "/fake/boundary", "charge") is False
     assert pipeline._money_single(spark, "/fake/boundary", "worst") is False
@@ -985,12 +995,12 @@ def test_money_gate_per_expression_kinds(spark, monkeypatch):
     fn = catalog.queries()["tpch_q1_pricing"]
     auto = sorted(map(tuple, fn(spark, sf).collect()))
     spark.conf.set("spark.kafkaBackupSpark.moneyMode", "hilo")
-    catalog.release_plan_cache(spark)
+    artifacts.release(spark)
     try:
         hilo = sorted(map(tuple, fn(spark, sf).collect()))
     finally:
         spark.conf.unset("spark.kafkaBackupSpark.moneyMode")
-        catalog.release_plan_cache(spark)
+        artifacts.release(spark)
     assert auto == hilo
 
 
@@ -1053,7 +1063,7 @@ def test_embedding_near_dup_single_pair_cosine_eval(spark):
         assert live == 1, plan
         assert _live_node_count(plan, "FlatMapGroupsInArrow") == 1, plan
     finally:
-        catalog.release_plan_cache(spark)
+        artifacts.release(spark)
 
 
 def test_media_stats_single_python_boundary(spark):
@@ -1071,7 +1081,7 @@ def test_media_stats_single_python_boundary(spark):
             plan = _plan(qs[name](spark, "/root/testdata/sf0.001"))
             assert _live_node_count(plan, "MapInPandas") == 1, (name, plan)
     finally:
-        catalog.release_plan_cache(spark)
+        artifacts.release(spark)
 
 
 def test_ivf_topk_single_python_boundary(spark):
@@ -1091,4 +1101,4 @@ def test_ivf_topk_single_python_boundary(spark):
         assert _live_node_count(plan, "BatchEvalPython") == 0, plan
         assert _live_node_count(plan, "MapInPandas") == 0, plan
     finally:
-        catalog.release_plan_cache(spark)
+        artifacts.release(spark)

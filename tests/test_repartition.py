@@ -52,9 +52,9 @@ def test_auto_impl_uses_kernel_when_probe_succeeds(spark):
     """impl="auto" (the default) must resolve to the Arrow-batched numpy
     kernel on executors where the package imports (this environment), and
     the probe must run at most once per session."""
-    from kafka_backup_spark.operators import repartition as rp
+    from kafka_backup_spark import artifacts
 
-    rp._KERNEL_PROBE.clear()
+    artifacts.release(spark, "kernel-probe")
     df = spark.range(0, 10).select(
         F.lit(0).alias("partition"),
         F.col("id").alias("offset"),
@@ -63,23 +63,21 @@ def test_auto_impl_uses_kernel_when_probe_succeeds(spark):
     out = assign_target_partitions(df, 4)  # impl defaults to "auto"
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan  # kernel path chosen
-    app = spark.sparkContext.applicationId
-    assert rp._KERNEL_PROBE == {app: True}
+    assert artifacts.entries(spark, "kernel-probe") == {"murmur2": True}
     # second call: no new probe entry, same resolution
     out2 = assign_target_partitions(df, 4)
     assert "ArrowEvalPython" in out2._jdf.queryExecution().executedPlan().toString()
-    assert rp._KERNEL_PROBE == {app: True}
+    assert artifacts.entries(spark, "kernel-probe") == {"murmur2": True}
 
 
 def test_auto_impl_falls_back_to_jvm_on_probe_failure(spark):
     """Portability: when the executor probe fails (package/numpy missing on
     executors), impl="auto" must fall back to the pure-JVM fold — zero
     Python nodes in the plan — and produce identical partitions."""
-    from kafka_backup_spark.operators import repartition as rp
+    from kafka_backup_spark import artifacts
 
-    app = spark.sparkContext.applicationId
-    rp._KERNEL_PROBE.clear()
-    rp._KERNEL_PROBE[app] = False  # simulate a failed probe
+    artifacts.release(spark, "kernel-probe")
+    artifacts.get_or_build(spark, "kernel-probe", "murmur2", lambda: False)  # a failed probe
     try:
         df = spark.range(0, 50).select(
             F.lit(0).alias("partition"),
@@ -91,7 +89,7 @@ def test_auto_impl_falls_back_to_jvm_on_probe_failure(spark):
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
         jvm_rows = {r["offset"]: r["target_partition"] for r in out.collect()}
     finally:
-        rp._KERNEL_PROBE.clear()
+        artifacts.release(spark, "kernel-probe")
     forced = assign_target_partitions(df, 4, impl="pandas")
     pandas_rows = {r["offset"]: r["target_partition"] for r in forced.collect()}
     assert jvm_rows == pandas_rows  # bit-identical impls

@@ -5,7 +5,7 @@ below these floors."""
 
 from __future__ import annotations
 
-from kafka_backup_spark import catalog
+from kafka_backup_spark import artifacts, catalog
 
 
 def _rows(spark, sf_dir, name):
@@ -43,22 +43,20 @@ def test_embedding_near_dup_finds_planted_pairs(spark, sf_dir):
 def test_shared_gram_cache_single_entry_and_release(spark, sf_dir):
     """Repeated LSH/near-dup calls reuse ONE cached gram frame; release
     unpersists and empties the registry."""
-    from kafka_backup_spark.queries import textops
-
-    textops.release_gram_cache()
+    artifacts.release()
     q = catalog.queries()
     q["lsh_candidates"](spark, sf_dir).count()
     q["near_dup_pipeline"](spark, sf_dir).count()
     q["lsh_candidates"](spark, sf_dir).count()
-    app = spark.sparkContext.applicationId
-    grams = [k for k in textops._GRAM_CACHE if k[0] == app]
+    grams = artifacts.entries(spark, "gram")
     # exactly TWO shared frames — the gram arrays and the SIZED band table
     # (bucket sizes ride along as `_n`) — regardless of how many calls ran
-    assert len(grams) == 2
-    for k in grams:
-        assert textops._GRAM_CACHE[k].storageLevel.useMemory
-    textops.release_gram_cache(spark)
-    assert not [k for k in textops._GRAM_CACHE if k[0] == app]
+    assert set(grams) == {("arrays", sf_dir), ("bands", sf_dir)}
+    for df in grams.values():
+        assert df.storageLevel.useMemory
+    artifacts.release(spark)
+    assert not artifacts.entries(spark, "gram")
+    assert not any(df.is_cached for df in grams.values())
 
 
 def test_ann_index_built_once_and_released(spark, sf_dir):
@@ -66,28 +64,26 @@ def test_ann_index_built_once_and_released(spark, sf_dir):
     artifact: repeated calls reuse ONE registry entry per index tag, results
     are identical across calls (deterministic build), and release empties
     the registry and unpersists the frames."""
-    from kafka_backup_spark.queries import textops
-
-    textops.release_gram_cache()
+    artifacts.release()
     q = catalog.queries()
     first_rows = set(map(tuple, q["embedding_near_dup"](spark, sf_dir).collect()))
-    app = spark.sparkContext.applicationId
-    entries = {k: v for k, v in textops._ANN_INDEX.items() if k[0] == app}
+    entries = artifacts.entries(spark, "ann")
     assert len(entries) == 1  # one index, not one per call
     (key, entry) = next(iter(entries.items()))
     corpus_before = entry["corpus"]
     second_rows = set(map(tuple, q["embedding_near_dup"](spark, sf_dir).collect()))
     assert second_rows == first_rows  # cached index ≡ fresh build
-    entries2 = {k: v for k, v in textops._ANN_INDEX.items() if k[0] == app}
+    entries2 = artifacts.entries(spark, "ann")
     assert set(entries2) == {key}  # no growth
     assert entries2[key]["corpus"] is corpus_before  # same persisted frame
     assert entry["corpus"].storageLevel.useMemory
     assert entry["member"].storageLevel.useMemory
     q["ivf_topk"](spark, sf_dir).count()
-    assert len([k for k in textops._ANN_INDEX if k[0] == app]) == 2  # own tag
-    textops.release_gram_cache(spark)
-    assert not [k for k in textops._ANN_INDEX if k[0] == app]
+    assert len(artifacts.entries(spark, "ann")) == 2  # own tag
+    artifacts.release(spark)
+    assert not artifacts.entries(spark, "ann")
     assert not entry["corpus"].is_cached
+    assert not entry["member"].is_cached
 
 
 def test_dup_clusters_consistent_with_pairs(spark, sf_dir):
@@ -208,8 +204,6 @@ def test_gram_queries_survive_short_documents(spark, tmp_path):
     short-doc rows."""
     import duckdb
 
-    from kafka_backup_spark.queries import textops
-
     rows = [
         (0, "en", "solo", "web", 4),
         (1, "en", "two words", "web", 9),
@@ -220,7 +214,7 @@ def test_gram_queries_survive_short_documents(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, lang string, text string, source string, n_chars long"
     ).write.parquet(f"{sf}/documents.parquet")
-    textops.release_gram_cache(spark)
+    artifacts.release(spark)
     q = catalog.queries()
     con = duckdb.connect()
     con.sql(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet/*.parquet'")
@@ -229,7 +223,7 @@ def test_gram_queries_survive_short_documents(spark, tmp_path):
         got = sorted(map(tuple, q[name](spark, sf).collect()))  # must not raise
         want = sorted(tuple(r) for r in con.sql(oracles[name]).fetchall())
         assert len(got) == len(want), name
-    textops.release_gram_cache(spark)
+    artifacts.release(spark)
 
 
 def test_cluster_balance_partitions_the_corpus(spark, sf_dir):

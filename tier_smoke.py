@@ -271,15 +271,6 @@ def span_index_smoke(spark, src_dir: str, version_tiers: list[int], out: str) ->
         }))
 
 
-def release_all(spark) -> None:
-    from kafka_backup_spark import catalog
-    from kafka_backup_spark.queries import common, textops
-
-    textops.release_gram_cache(spark)   # grams + ANN + tagged persists
-    common.release_meta_cache(spark)    # meta frames + hot pins
-    catalog.release_plan_cache(spark)
-
-
 def soak_batches_dir(spark, out: str, batches: int, per_batch: int) -> str:
     """One parquet file per micro-batch under ``out``: every batch re-ships
     each doc slot's stable ≥SPAN_LEN base span (batch 0 stores it; later
@@ -437,7 +428,7 @@ def main() -> int:
                     help="comma list of query families to run (text,asof,cluster)")
     args = ap.parse_args()
 
-    from kafka_backup_spark import catalog
+    from kafka_backup_spark import artifacts, catalog
     from kafka_backup_spark.queries import common
     from kafka_backup_spark.session import get_spark
 
@@ -495,7 +486,7 @@ def main() -> int:
             if gate is not None:
                 common._HOT_TABLE_MAX_BYTES = gate
             try:
-                release_all(spark)
+                artifacts.release(spark)
                 for name in todo:
                     rows = (
                         nevents if name in ASOF_QUERIES
@@ -516,7 +507,7 @@ def main() -> int:
             print(json.dumps(lsh_cap_recall_row(spark, tier_dir, factor)))
         if "cluster" in fams:
             print(json.dumps(ann_recall_row(spark, qs, tier_dir, factor)))
-        release_all(spark)
+        artifacts.release(spark)
     spark.stop()
     return 0
 
