@@ -54,8 +54,9 @@ def main() -> int:
         "--oracle-layout",
         help="layout root: point DuckDB's lineitem/orders views at the "
         "orderkey-SORTED bucketed copies, removing the Spark-only layout "
-        "asymmetry (oracle_layout_ab.py measured a 24.9%% oracle-side "
-        "refund at sf10) — recorded in the summary JSON",
+        "asymmetry (a 24.9%% oracle-side refund at sf10, SCALE.md "
+        "'Round-13: the oracle-layout asymmetry, bounded') — recorded in "
+        "the summary JSON",
     )
     args = ap.parse_args()
 

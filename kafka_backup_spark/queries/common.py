@@ -11,8 +11,6 @@ codegen long path, then convert to DOUBLE identically.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,22 +56,8 @@ _SPREAD_BYTES_PER_PART = 512 << 10  # ~0.5 MB of source parquet per pinned parti
 # 12 partitions and minhash's 30M-row shingle explode plateaued; 0.5 MB
 # keeps sf0.1 fixtures at the floor of 8 while the amplified tiers climb
 # back toward full parallelism.  TPC-H consumption stays capped by
-# _VIEW_PARTS regardless.)
-#
-# Both this and COMPACT_PARTS were tuned on local[32]; on a real cluster the
-# right values depend on executor count and RPC cost, so both read from
-# spark.conf with the local-mode value as the default (VERDICT r6 #6):
-#   spark.kafkaBackupSpark.spreadBytesPerPart   (bytes per pinned partition)
-#   spark.kafkaBackupSpark.compactParts         (map width for small inputs)
-# SCALE.md "Session tuning knobs" records the sizing guidance.
-
-
-def _conf_int(spark: SparkSession, key: str, default: int) -> int:
-    try:
-        v = int(spark.conf.get(key, str(default)))
-        return v if v > 0 else default
-    except (TypeError, ValueError):
-        return default
+# _VIEW_PARTS regardless.)  Both this and COMPACT_PARTS were tuned on
+# local[32]; SCALE.md "Tuning constants" records the sizing guidance.
 
 
 def spread_parts(spark: SparkSession, nbytes: int) -> int:
@@ -83,8 +67,7 @@ def spread_parts(spark: SparkSession, nbytes: int) -> int:
     consulted UNDER the pin gate — streamed tables keep their scan splits —
     so the constant tunes small-input overhead, not cluster scans."""
     dp = spark.sparkContext.defaultParallelism
-    bpp = _conf_int(spark, "spark.kafkaBackupSpark.spreadBytesPerPart", _SPREAD_BYTES_PER_PART)
-    want = (nbytes + bpp - 1) // bpp
+    want = -(-nbytes // _SPREAD_BYTES_PER_PART)
     return min(dp, max(8, int(want)))
 
 # ── Spark side ────────────────────────────────────────────────────────────
@@ -120,20 +103,13 @@ def small_inputs(sf_dir: str) -> bool:
 
 # map-side width for small-gated metadata queries: enough slots to overlap
 # task startup, few enough that scheduling doesn't dominate (measured on the
-# as-of family: 32→8 map tasks ≈ 2× end-to-end at sf0.1).  Conf-overridable
-# per session — see the knob comment at _SPREAD_BYTES_PER_PART.
+# as-of family: 32→8 map tasks ≈ 2× end-to-end at sf0.1).
 COMPACT_PARTS = 8
 
 
-def compact_small(df: DataFrame, sf_dir: str, parts: int | None = None) -> DataFrame:
+def compact_small(df: DataFrame, sf_dir: str) -> DataFrame:
     """Narrow coalesce for small-gated inputs; identity at scale."""
-    if not small_inputs(sf_dir):
-        return df
-    if parts is None:
-        parts = _conf_int(
-            df.sparkSession, "spark.kafkaBackupSpark.compactParts", COMPACT_PARTS
-        )
-    return df.coalesce(parts)
+    return df.coalesce(COMPACT_PARTS) if small_inputs(sf_dir) else df
 
 
 def records_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -191,9 +167,7 @@ def _shared_meta(
     return artifacts.get_or_build(spark, "meta", (sf_dir, kind), pin)
 
 
-_HOT_TABLE_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_HOT_TABLE_MAX_BYTES", str(256 << 20))
-)
+_HOT_TABLE_MAX_BYTES = 256 << 20
 
 
 def hot_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -206,8 +180,8 @@ def hot_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (spread to the session's parallelism, MEMORY_AND_DISK), and every
     catalog query starts from a parallel in-memory columnar scan.
 
-    Scale gate: tables larger than SPARK_GRAFT_HOT_TABLE_MAX_BYTES (default
-    256 MB) stream straight from parquet — at that size the scan itself
+    Scale gate: tables larger than _HOT_TABLE_MAX_BYTES (256 MB) stream
+    straight from parquet — at that size the scan itself
     yields enough splits for parallelism and pinning a fact table would be
     wrong at 100 TB.  Object-store and ``file://`` paths are sized through
     the Hadoop filesystem (fsio.dataset_bytes) and pin under the gate too;

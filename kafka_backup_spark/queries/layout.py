@@ -2,7 +2,7 @@
 
 The reference keys its segment store by topic/partition so restores never
 shuffle (backup/engine.rs:1156-1162 — partition-aligned segment layout);
-``SegmentStore.write_bucketed`` is the Spark analog for record segments.
+``SegmentStore.compact_bucketed`` is the Spark analog for record segments.
 This module applies the same storage discipline to the analytic fact
 tables: ``lineitem`` and ``orders`` written ``bucketBy(N, orderkey)`` +
 ``sortBy(orderkey)``, one file per bucket.

@@ -541,7 +541,8 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     SHUFFLE_HASH on q5/q9's SMJs — washes (the win here is the reused
     distribution, absent there).
 
-    r13 (q3_decompose.py, sf10, layout served): the stage table named the
+    r13 (sf10, layout served; SCALE.md "Round-13: q3's floor named"):
+    the stage table named the
     floor — li slice scan 0.64 s (the shipdate filter keeps 33.6M of 60M
     rows), BUILDING-orders build chain 0.62 s, and the SHJ's +1.0 s is
     the hash build over the 33.6M-row li slice itself.  Under the layout
@@ -649,16 +650,18 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     negative still stands: pre-aggregating revenue per (orderkey,
     nation) before the orders join measured 5.05 s (~4 lineitems/order
     ≈ no reduction to pay for the rollup).  r11 pinned the last
-    untried shape (q5_probe.py, sf10, min-of-6 interleaved, parity
-    OK): pre-joining the date-filtered orders with ASIA customers into
-    an ~860k-row (o_orderkey, c_nationkey) product and BROADCASTing it
-    — zero exchanges on the 60M fact side — measured 3.05 vs 2.68 s
+    untried shape (sf10, min-of-6 interleaved, parity OK; SCALE.md
+    "q5 dim-product broadcast probe"): pre-joining the date-filtered
+    orders with ASIA customers into an ~860k-row (o_orderkey,
+    c_nationkey) product and BROADCASTing it — zero exchanges on the
+    60M fact side — measured 3.05 vs 2.68 s
     (−14%): building the dim product itself shuffles 15M orders + 1.5M
     customers on custkey, which costs more than the orderkey exchange
     it removes.  The ORACLE keeps the reference flat-join text
     (SQL_TPCH_Q5).
 
-    r12 stage decomposition (q5_decompose.py, SCALE.md): scan 0.44 /
+    r12 stage decomposition (SCALE.md "q5 stage decomposition at
+    sf10"): scan 0.44 /
     +ASIA probe 1.66 / +orderkey exchange pair + SHJ 2.74 / full 3.11 —
     the exchange block is the largest increment, so the bucketed layout
     (queries/layout.py, opt-in below) removes it: +18.1% at sf10
@@ -858,9 +861,10 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     3.29 s, full query 3.56 s — 92% of the wall is the 60M-row →
     15M-group aggregate, which no join-side rewrite can touch.  r11
     closed the "vectorization territory" branch with a measured
-    NEGATIVE (vector_probe.py, sf10, min-of-5 interleaved, parity-
-    checked): an Arrow-side per-partition partial aggregate
-    (mapInArrow → pyarrow group_by → JVM final agg) measured 15.67 s
+    NEGATIVE (sf10, min-of-5 interleaved, parity-checked; SCALE.md
+    "q18/q16 vectorization probe"): an Arrow-side per-partition partial
+    aggregate (mapInArrow → pyarrow group_by → JVM final agg) measured
+    15.67 s
     vs the JVM rollup's 2.64 s — the Arrow transfer of 60M narrow rows
     costs ~6× the entire Tungsten hash aggregate.  The JVM hash agg IS
     the vectorized path; the rollup floor stands.  An explicit broadcast of the
@@ -1140,8 +1144,9 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over the distinct set the oracle computes.
     #
     # ASCII-guarded binary slice (r16, guide §1.2 per-task work —
-    # minhash_ab.py): substring on a STRING walks i bytes to find the char
-    # offset (UTF8String counts chars from the start per call), an O(L²)
+    # OPTIMIZATION_r16.md §1): substring on a STRING walks i bytes to find
+    # the char offset (UTF8String counts chars from the start per call),
+    # an O(L²)
     # byte walk per document that measured as the LARGEST fragment of this
     # query (0.255 of 0.519 s at sf0.1 — more than the md5s).  When a doc
     # is pure ASCII (octet_length = length, checked ONCE per doc before the
@@ -1704,7 +1709,7 @@ def q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # code path the image_stats operator runs); only the narrow
     # (media_id, dims) frame enters and the narrow stats frame leaves.
     # A/B at sf0.1: 0.836 → 0.730 s min-of-8 interleaved, parity hash
-    # identical (media_fuse_ab.py).
+    # identical (OPTIMIZATION_r15.md §1b).
     def synth_stats(batches):
         for pdf in batches:
             yield pd_mod.DataFrame(
@@ -1778,7 +1783,7 @@ def q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Fused synth+decode — same §4.1 move as q_image_stats above (the WAV
     # payload crossed the Arrow boundary twice between two back-to-back
     # Python stages).  A/B at sf0.1: 0.492 → 0.398 s min-of-8 interleaved,
-    # parity hash identical (media_fuse_ab.py).
+    # parity hash identical (OPTIMIZATION_r15.md §1b).
     def synth_stats(batches):
         for pdf in batches:
             yield pd_mod.DataFrame(
@@ -3235,16 +3240,18 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's expand-based countDistinct already is that plan), and the
     r9 distinct-before-join negative (7.68 s) still stands — the
     residue is aggregate constant factor, not plan shape.  r11 pinned
-    the Arrow branch too (vector_probe.py, sf10, min-of-5, parity-
-    checked): mapInArrow per-partition distinct on (brand,type,size,
-    suppkey) feeding the JVM countDistinct measured 3.83 s vs 1.55 s
+    the Arrow branch too (sf10, min-of-5, parity-checked; SCALE.md
+    "q18/q16 vectorization probe"): mapInArrow per-partition distinct on
+    (brand,type,size,suppkey) feeding the JVM countDistinct measured
+    3.83 s vs 1.55 s
     for the shipped plan — Arrow transfer of the 7.5M survivors costs
     more than the whole aggregate it was meant to speed up.
 
     r13 (VERDICT r12 #1) retried the distinct-pair pre-aggregate ON the
-    partkey bucket family (q16_probe.py, sf10, min-of-6 interleaved,
-    parity OK): the bucket HashPartitioning(l_partkey) does make the
-    (l_partkey, l_suppkey) distinct exchange-free, but the fixture's
+    partkey bucket family (sf10, min-of-6 interleaved, parity OK;
+    SCALE.md "Round-13: q16 on the partkey family"): the bucket
+    HashPartitioning(l_partkey) does make the (l_partkey, l_suppkey)
+    distinct exchange-free, but the fixture's
     pairs are 98.5% UNIQUE (59.10M distinct of 60M rows — the generator
     draws l_suppkey independently; there is no partsupp-style 4-per-part
     repetition to collapse), so the 60M-row hash aggregate buys a ~1.5%
@@ -3257,12 +3264,13 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     other join-shaped opt-ins.
 
     r15 (VERDICT r14 #1) NAMED the floor with a q5-style stage table
-    (q16_decompose.py, sf10, min-of-6 interleaved; SCALE.md r15): scan
+    (sf10, min-of-6 interleaved; SCALE.md "Round-15: q16's
+    countDistinct floor NAMED"): scan
     0.41 s → +part broadcast 1.01 → +anti-join 1.06 → +PLAIN grouped
     count 1.43 → full countDistinct 2.68 — the distinct itself is +1.25 s
     and everything upstream is already tight; manual two-level distinct
-    is a wash (2.74).  The fixture-dependence caveat is CLOSED:
-    q16_realistic_ab.py re-ran the pre-distinct on a derived sf10
+    is a wash (2.74).  The fixture-dependence caveat is CLOSED: a
+    re-run of the pre-distinct on a derived sf10
     lineitem with partsupp-style 4-suppliers-per-part duplication (60M
     rows → 8.0M distinct pairs) and it STILL lost 3.6× (5.87 vs 1.61 s,
     parity-checked) — the countDistinct's own partial phase already
@@ -3417,7 +3425,7 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference double-correlated formulation (SQL_TPCH_Q21), so every
     driver run proves the decorrelation equivalent.
 
-    r16 (q21_decompose.py / q21_ab.py): the window pair was the largest
+    r16 (OPTIMIZATION_r16.md §2): the window pair was the largest
     stage fragment (+0.20 s of 0.60 at sf0.1) because a window needs a
     SORT of the ~550k per_os rows.  The filter keeps rows with r_rows > 0
     AND n_supp_r = 1 — i.e. EXACTLY ONE supplier with 'R' rows per
@@ -3436,7 +3444,8 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     SHUFFLE_HASH hint: both sides already satisfy the orderkey hash
     distribution, so the hint swaps the SMJ's per-bucket merge for a
     per-bucket hash build with NO exchange either way — measured at sf10
-    (bucketed_probe.py, min-of-6 interleaved, parity OK): bucketed SMJ was
+    (min-of-6 interleaved, parity OK; SCALE.md "q21 on the layout"):
+    bucketed SMJ was
     a wash vs shipped (−4.3%) but bucketed SHJ won +49.7% (3.92 → 1.97 s).
     Unbucketed keeps the hint off (r9 pinned plain SMJ→SHJ swaps as
     washes)."""

@@ -2018,7 +2018,7 @@ SQL_DUP_CLUSTERS = _dup_clusters_sql()
 # selfcheck.py runs these when SPARK_GRAFT_SELF_ALT names the query; the
 # recursive texts above stay the DRIVER-facing oracles (single-statement),
 # and a pytest pins alt == recursive == Spark at the gate scale.
-def build_alt_pair_table(con, slices: int | None = None) -> str:
+def build_alt_pair_table(con) -> str:
     """Materialize the verified near-dup pair set into a DuckDB TEMP table
     ``alt_pairs`` with a DISK-BOUNDED plan, and return the table name —
     the scale formulation of the pair-verify stage (r12, VERDICT r11 #4).
@@ -2044,8 +2044,7 @@ def build_alt_pair_table(con, slices: int | None = None) -> str:
     keeps the plain reference text (SQL_NEAR_DUP_PIPELINE)."""
     from kafka_backup_spark.functions.hashing import fast_hash64_duckdb
 
-    if slices is None:
-        slices = int(os.environ.get("SPARK_GRAFT_ALT_PAIR_SLICES", "16"))
+    slices = 16
     con.sql(
         "CREATE OR REPLACE TEMP TABLE alt_cand AS " + SQL_LSH_CANDIDATES
     )

@@ -76,16 +76,15 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def autosize_shuffle_partitions(
-    spark: SparkSession,
-    *paths: str,
-    target_bytes: int | None = None,
-    floor: int = 2,
-) -> int:
+# compressed parquet bytes per reduce task (autosize_shuffle_partitions)
+SHUFFLE_TARGET_BYTES = 8 << 20
+
+
+def autosize_shuffle_partitions(spark: SparkSession, *paths: str) -> int:
     """Input-proportional shuffle parallelism (r11, measured): set
     ``spark.sql.shuffle.partitions`` from the compressed parquet footprint
-    of the inputs — ``ceil(total_bytes / target)`` clamped to
-    ``[floor, defaultParallelism]``.
+    of the inputs — ``ceil(total_bytes / SHUFFLE_TARGET_BYTES)`` clamped to
+    ``[2, defaultParallelism]``.
 
     Why: at small inputs the per-reduce-task scheduling cost dominates —
     the sf0.1 headline bench dropped 9.93 → 8.04 s total (min-of-5
@@ -99,10 +98,7 @@ def autosize_shuffle_partitions(
     measured points.
 
     At cluster scale the cap IS the scheduling parallelism (total executor
-    cores), which AQE skew-split and coalesce then adjust at runtime; for
-    genuinely huge per-core inputs raise the target via
-    ``spark.kafkaBackupSpark.shuffle.targetBytes`` so partitions stay
-    memory-bounded rather than count-bounded.
+    cores), which AQE skew-split and coalesce then adjust at runtime.
 
     Only local filesystem paths are sized (the bench/testdata contract);
     any non-local URI anywhere in ``paths`` leaves the session setting
@@ -113,10 +109,6 @@ def autosize_shuffle_partitions(
     and JSON manifests / media fixtures beside the tables would skew it
     (ADVICE r11 #3).
     """
-    if target_bytes is None:
-        target_bytes = int(
-            spark.conf.get("spark.kafkaBackupSpark.shuffle.targetBytes", str(8 << 20))
-        )
     locals_ = []
     for p in paths:
         if "://" in p and not p.startswith("file://"):
@@ -133,7 +125,7 @@ def autosize_shuffle_partitions(
                 )
         elif os.path.isfile(p):
             total += os.path.getsize(p)
-    cap = max(floor, spark.sparkContext.defaultParallelism)
-    n = min(cap, max(floor, -(-total // target_bytes)))
+    cap = max(2, spark.sparkContext.defaultParallelism)
+    n = min(cap, max(2, -(-total // SHUFFLE_TARGET_BYTES)))
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     return n

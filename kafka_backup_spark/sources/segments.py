@@ -290,32 +290,6 @@ class SegmentStore:
             ).alias("headers"),
         )
 
-    def write_bucketed(
-        self,
-        records: DataFrame,
-        table: str,
-        buckets: int = 64,
-        max_records_per_file: int = DEFAULT_MAX_RECORDS_PER_FILE,
-    ) -> None:
-        """S4 variant: segment table bucketed + sorted by (topic, partition).
-
-        Bucketing pre-shuffles ONCE at write time; every later equi-join or
-        aggregation keyed on (topic, partition) — restore⋈mapping, as-of
-        lookups, validation joins — reads co-located buckets and skips its
-        exchange entirely (asserted in test_plan_quality).  At 100 TB the
-        repeated-join workloads (three-phase restore, validation sweeps)
-        amortize the one write-side shuffle across every downstream query.
-        Requires a session catalog (saveAsTable); the plain parquet layout
-        in ``write`` stays the default for catalog-less stores."""
-        (
-            records.write.bucketBy(buckets, "topic", "partition")
-            .sortBy("topic", "partition", "offset")
-            .option("maxRecordsPerFile", max_records_per_file)
-            .option("path", f"{self.root}/bucketed/{table}")
-            .mode("append")
-            .saveAsTable(table)
-        )
-
     def compact_bucketed(
         self,
         spark: SparkSession,

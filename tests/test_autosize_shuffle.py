@@ -73,13 +73,3 @@ def test_only_parquet_files_count(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
 
-
-def test_target_bytes_conf_override(spark, tmp_path):
-    _mkfile(str(tmp_path / "t.parquet"), 10 << 20)
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.kafkaBackupSpark.shuffle.targetBytes", str(4 << 20))
-        assert autosize_shuffle_partitions(spark, str(tmp_path)) == 3
-    finally:
-        spark.conf.unset("spark.kafkaBackupSpark.shuffle.targetBytes")
-        spark.conf.set("spark.sql.shuffle.partitions", before)

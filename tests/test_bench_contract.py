@@ -91,3 +91,56 @@ def test_cpu_anchor_deterministic_and_engine_agreeing(spark):
     sql = f"SELECT {bench._ANCHOR_EXPR.replace('id', 'i')} FROM range({bench._ANCHOR_N}) t(i)"
     assert int(con.sql(sql).fetchall()[0][0]) == bench._ANCHOR_VALUE
     con.close()
+
+
+def test_profile_entry_reads_counters_and_operator_metrics(spark, sf_dir):
+    """bench's per-query profile: the timed run's span yields engine
+    counters and per-operator SQL metrics, in a JSON-ready entry."""
+    query = catalog.queries()["tpch_q6_forecast"]
+    tracer = bench.StageSafeTracer(spark, "test")
+    seconds, span = bench.timed_run(
+        tracer, "tpch_q6_forecast",
+        lambda: query(spark, sf_dir).write.format("noop").mode("overwrite").save(),
+    )
+    entry = bench.profile_entry(tracer, span, seconds)
+
+    assert entry["jobs"] >= 1
+    assert entry["tasks"] >= 1
+    assert entry["seconds"] > 0
+    assert entry["executor_run_s"] >= 0
+    assert any(isinstance(v, float) for _op, _metric, v in entry["operators"])
+    assert json.loads(json.dumps(entry)) == entry
+
+
+def test_metric_value_keeps_unparseable_text():
+    """AQEShuffleRead reports a per-task metric whose max carries
+    "(driver)" instead of "(stage …: task …)"; sqlmetrics.parse rejects it,
+    and bench keeps the raw text rather than aborting the profile."""
+    text = (
+        "total (min, med, max (stageId: taskId))\n"
+        "2.5 MiB (1283.1 KiB, 1283.1 KiB, 1283.1 KiB (driver))"
+    )
+    assert bench.metric_value(text) == text
+    assert bench.metric_value("64.2 MiB") == 64.2 * (1 << 20)
+
+
+def test_stage_walk_skips_evicted_stage_ids():
+    """A job can list a stage id the status store has already evicted (a
+    reused, skipped stage); bench's stage walk skips it instead of raising
+    out of the profile."""
+    from types import SimpleNamespace as NS
+
+    from py4j.protocol import Py4JJavaError
+
+    done = NS(status=lambda: NS(toString=lambda: "COMPLETE"))
+
+    def last_stage_attempt(stage_id):
+        if stage_id == 2:
+            raise Py4JJavaError("No stage with id 2", NS(_target_id="o1"))
+        return done
+
+    ids = [1, 2, 3]
+    tracer = object.__new__(bench.StageSafeTracer)
+    tracer._core = NS(lastStageAttempt=last_stage_attempt)
+    tracer._job = lambda jid: NS(stageIds=lambda: NS(size=lambda: len(ids), apply=ids.__getitem__))
+    assert list(tracer._stages([7])) == [done, done]

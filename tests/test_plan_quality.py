@@ -427,19 +427,23 @@ def test_tpch_q19_disjunction_stays_equi_join(spark):
 
 
 def test_bucketed_segment_join_skips_exchange(spark, sf_dir, tmp_path):
-    """write_bucketed pre-shuffles once: a (topic, partition)-keyed join of
-    two bucketed tables runs with NO exchange on either side."""
+    """layout.write_bucketed_table pre-shuffles once: a (topic,
+    partition)-keyed join of two bucketed tables runs with NO exchange on
+    either side."""
+    from kafka_backup_spark.queries import layout
+
+    def write(df, name):
+        layout.write_bucketed_table(
+            spark, df, name, str(tmp_path / name),
+            ["topic", "partition"], ["topic", "partition", "offset"], 8,
+        )
+
     recs = events_as_records(load_table(spark, sf_dir, "events"))
-    store = SegmentStore(str(tmp_path / "store"))
-    spark.sql("DROP TABLE IF EXISTS bk_records")
-    spark.sql("DROP TABLE IF EXISTS bk_watermarks")
-    store.write_bucketed(recs, "bk_records", buckets=8)
+    write(recs, "bk_records")
     wm = recs.groupBy("topic", "partition").agg(
         F.max("offset").alias("hwm")
     )
-    store.write_bucketed(
-        wm.withColumnRenamed("hwm", "offset"), "bk_watermarks", buckets=8
-    )
+    write(wm.withColumnRenamed("hwm", "offset"), "bk_watermarks")
     a = spark.table("bk_records")
     b = spark.table("bk_watermarks").select(
         "topic", "partition", F.col("offset").alias("hwm")
@@ -678,40 +682,11 @@ def test_compact_small_is_identity_beyond_the_gate(spark, sf_dir, monkeypatch):
     from kafka_backup_spark.queries import common
 
     df = spark.range(100).repartition(16)
-    small = common.compact_small(df, sf_dir, parts=2)
-    assert small.rdd.getNumPartitions() == 2  # under the gate: coalesced
+    small = common.compact_small(df, sf_dir)
+    assert small.rdd.getNumPartitions() == common.COMPACT_PARTS  # under the gate: coalesced
     monkeypatch.setattr(common, "_HOT_TABLE_MAX_BYTES", 1)
-    big = common.compact_small(df, sf_dir, parts=2)
+    big = common.compact_small(df, sf_dir)
     assert big is df  # beyond the gate: untouched
-
-
-def test_tuning_knobs_read_session_conf(spark, sf_dir):
-    """VERDICT r6 #6: _SPREAD_BYTES_PER_PART and COMPACT_PARTS were tuned on
-    local[32]; a real cluster overrides them per session via spark.conf —
-    the defaults must hold when the conf keys are unset or garbage."""
-    from kafka_backup_spark.queries import common
-
-    dp = spark.sparkContext.defaultParallelism
-    base = common.spread_parts(spark, 11 << 20)
-    try:
-        # 1 MiB per part → 11 MiB wants 11 partitions
-        spark.conf.set("spark.kafkaBackupSpark.spreadBytesPerPart", str(1 << 20))
-        assert common.spread_parts(spark, 11 << 20) == min(dp, max(8, 11))
-        # garbage / non-positive values fall back to the default
-        spark.conf.set("spark.kafkaBackupSpark.spreadBytesPerPart", "banana")
-        assert common.spread_parts(spark, 11 << 20) == base
-        spark.conf.set("spark.kafkaBackupSpark.spreadBytesPerPart", "-5")
-        assert common.spread_parts(spark, 11 << 20) == base
-
-        spark.conf.set("spark.kafkaBackupSpark.compactParts", "3")
-        df = spark.range(100).repartition(16)
-        assert common.compact_small(df, sf_dir).rdd.getNumPartitions() == 3
-        # explicit parts argument still wins over the conf
-        assert common.compact_small(df, sf_dir, parts=2).rdd.getNumPartitions() == 2
-    finally:
-        spark.conf.unset("spark.kafkaBackupSpark.spreadBytesPerPart")
-        spark.conf.unset("spark.kafkaBackupSpark.compactParts")
-    assert common.spread_parts(spark, 11 << 20) == base
 
 
 def test_all_catalog_plans_are_hygienic(spark):
