@@ -129,15 +129,16 @@ def cmd_list(args, _doc) -> int:
     return 0
 
 
-def cmd_validate(args, doc) -> int:
-    """A11-style integrity scan: manifest vs a re-scan of the store."""
-    spark = get_spark("cli-validate")
-    from kafka_backup_spark.validation.checks import integrity_scan, validation_summary
+def _integrity_scan(spark, args, doc):
+    """A11, as ``validate`` and ``evidence`` both run it: the manifest vs a
+    re-scan of the store.  Returns ``(manifest doc, manifest, per-segment
+    scan)``, or None when the backup has no manifest."""
+    from kafka_backup_spark.validation.checks import integrity_scan
 
     docjson = ManifestStore(args.store, args.backup_id).load_doc()
     if docjson is None:
         print("no manifest found", file=sys.stderr)
-        return 1
+        return None
     m = doc_to_manifest(spark, docjson)
     # the rescan must derive segment keys with the SAME span the backup used:
     # manifest doc first, then --config, else the default — a non-default span
@@ -147,13 +148,23 @@ def cmd_validate(args, doc) -> int:
         span = cfgmod.backup_config(doc).segment_span
     rescan = mani.build_manifest(store_from_path(spark, args.store).read(spark), span or 1000)
     observed = rescan.select("key", "record_count", "start_offset", "end_offset")
-    # one rescan of the store: both outputs read the materialized scan
-    scan = integrity_scan(m, observed).localCheckpoint(eager=True)
-    _emit({
-        "segments": _rows(scan.orderBy("key")),
-        "summary": _rows(validation_summary(scan))[0],
-    })
-    return 0
+    # one rescan of the store: every output reads the materialized scan
+    return docjson, m, integrity_scan(m, observed).localCheckpoint(eager=True)
+
+
+def cmd_validate(args, doc) -> int:
+    """A11-style integrity scan: manifest vs a re-scan of the store.  Exit
+    code 1 when overall != passed, like ``validate-restore``."""
+    spark = get_spark("cli-validate")
+    from kafka_backup_spark.validation.checks import validation_summary
+
+    scanned = _integrity_scan(spark, args, doc)
+    if scanned is None:
+        return 1
+    _docjson, _m, scan = scanned
+    summary = _rows(validation_summary(scan))[0]
+    _emit({"segments": _rows(scan.orderBy("key")), "summary": summary})
+    return 0 if summary["overall"] == "passed" else 1
 
 
 def cmd_validate_restore(args, _doc) -> int:
@@ -759,17 +770,12 @@ def cmd_evidence(args, doc) -> int:
     from pyspark.sql import functions as F
 
     from kafka_backup_spark import evidence
-    from kafka_backup_spark.validation.checks import integrity_scan, validation_summary
+    from kafka_backup_spark.validation.checks import validation_summary
 
-    mstore = ManifestStore(args.store, args.backup_id)
-    docjson = mstore.load_doc()
-    if docjson is None:
-        print("no manifest found", file=sys.stderr)
+    scanned = _integrity_scan(spark, args, doc)
+    if scanned is None:
         return 1
-    m = doc_to_manifest(spark, docjson)
-    span = docjson.get("segment_span") or 1000
-    rescan = mani.build_manifest(store_from_path(spark, args.store).read(spark), span)
-    scan = integrity_scan(m, rescan.select("key", "record_count", "start_offset", "end_offset"))
+    docjson, m, scan = scanned
     summary = _rows(validation_summary(scan))[0]
     check = m.select(
         "topic", "partition",

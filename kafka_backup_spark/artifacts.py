@@ -1,8 +1,7 @@
 """Session artifacts: everything the catalog and restore paths build once per
 SparkSession and reuse — prepared query plans, pinned tables and metadata
 frames, gram and band tables, ANN indexes, registered temp views, the
-bucketed-layout manifest, footer-derived gate decisions and the executor
-kernel probe.
+bucketed-layout manifest and footer-derived gate decisions.
 
 Entries are keyed on (applicationId, kind, key).  A SparkContext stopped
 and restarted in the same process gets a new applicationId; the first

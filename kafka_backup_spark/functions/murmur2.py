@@ -8,11 +8,14 @@ matters: a restored topic must route each key to the same partition the Java
 client would pick, so we reimplement it here and verify against the published
 Kafka test vectors (tests/test_murmur2.py).
 
-Two surfaces:
-- ``murmur2(bytes)`` — pure-Python scalar (driver-side / oracle use)
-- ``murmur2_expr(col)`` / ``kafka_partition_expr(col, n)`` — an Arrow-batched
-  pandas UDF for executor-side vectorized use. Hashing is the only part of
-  the repartition path that leaves the JVM; the shuffle itself is Spark's.
+Three surfaces:
+- ``murmur2(bytes)`` — pure-Python scalar (driver-side / the tests' reference)
+- ``murmur2_pandas_expr(col)`` / ``kafka_partition_expr(col, n)`` — one
+  Arrow-batched numpy kernel for executor-side use. Hashing is the only part
+  of the repartition path that leaves the JVM; the shuffle itself is Spark's.
+  The kernel runs in Python workers, so the package must be importable on
+  every executor (``session.get_spark`` puts it on their PYTHONPATH).
+- ``murmur2_duckdb_sql(col)`` — the same hash as DuckDB SQL (the oracle).
 """
 
 from __future__ import annotations
@@ -78,7 +81,7 @@ def murmur2_numpy(keys: list) -> "object":
     no per-row Python), then the hash runs as ~maxlen/4 full-batch uint32
     passes; numpy's native uint32 wraparound IS the mod-2^32 arithmetic.
     Measured on local[32] at 20M keys: 14.2M keys/s end-to-end vs 1.7M/s for
-    the per-element Python map and 0.5M/s for the interpreted JVM fold
+    a per-element Python map and 0.5M/s for an interpreted JVM hex fold
     (SCALE.md)."""
     import numpy as np
 
@@ -138,132 +141,22 @@ def _murmur2_udf(keys: pd.Series) -> pd.Series:
 
 
 def murmur2_pandas_expr(col: Column | str) -> Column:
-    """Signed-32 murmur2 via Arrow-batched numpy kernel — the THROUGHPUT
-    path (14.2M keys/s on local[32] at 20M keys): use it when executors have
-    Python workers. ``murmur2_expr`` below is the pure-JVM expression — zero
-    Python dependency, bit-identical, but interpreted per-row (HOF folds
-    don't codegen; 0.5M keys/s measured) — it stays the default so the
-    repartition plan carries no Python nodes and works where Python workers
-    are forbidden; flip to impl="pandas" for the 100-TB hot path."""
+    """Signed-32 murmur2 of a binary column via the Arrow-batched numpy
+    kernel (14.2M keys/s on local[32] at 20M keys, SCALE.md).  Null keys
+    yield null."""
     return _murmur2_udf(F.col(col) if isinstance(col, str) else col)
 
 
-_M32 = 1 << 32
-
-
-def _let(value: Column, fn) -> Column:
-    """Bind ``value`` to a lambda variable so ``fn`` can reference it many
-    times while it is EVALUATED ONCE per row (Catalyst duplicates expression
-    trees textually; a higher-order-function lambda variable is a true
-    let-binding). One array wrap per binding — negligible next to the
-    string/conv work it deduplicates."""
-    return F.element_at(F.transform(F.array(value), fn), 1)
-
-
-def murmur2_expr(col: Column | str) -> Column:
-    """Signed-32 murmur2 of a binary column as a PURE-JVM expression.
-
-    The byte loop is an ``aggregate`` fold over the hex encoding, decoded one
-    4-byte word per ``conv`` (byte-swapped to little-endian arithmetically);
-    tail + finalization live inside the fold's ``finish`` lambda and chain
-    through let-bindings (``_let``) so no subtree — in particular the fold
-    body — is ever re-evaluated. All arithmetic is BIGINT mod 2^32 (products
-    ≤ 2^32·0x5BD1E995 < 2^63, no overflow). No Python workers on the
-    repartition hot path. Verified bit-for-bit against the published Kafka
-    vectors in tests/test_murmur2.py.
-
-    (The first cut of this expression extracted every byte with its own
-    substring+conv and spliced the fold body into ``when`` chains that
-    duplicated it ~32× — thousands of string ops per row. Kept as a warning.)
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    hx = F.hex(c)  # 2 hex chars per byte, uppercase
-    length = F.length(c)
-    n_words = F.floor(length / 4).cast("long")  # full 4-byte words
-    rem = length % 4
-    n4 = n_words * 4
-
-    def byte_at(i: Column) -> Column:
-        # i is 0-based byte index; conv returns its decimal value as string
-        return F.conv(F.substring(hx, i * 2 + 1, F.lit(2)), 16, 10).cast("long")
-
-    def mul_m(x: Column) -> Column:
-        return (x * F.lit(_M)) % F.lit(_M32)
-
-    def xor(a: Column, b: Column) -> Column:
-        return a.bitwiseXOR(b)
-
-    def shr(x: Column, n: int) -> Column:
-        return F.floor(x / F.lit(1 << n)).cast("long")
-
-    # words[w]: little-endian 4-byte word, ONE conv each (big-endian decode,
-    # arithmetic byte swap), materialized once as an array before the fold
-    def le_word(w: Column) -> Column:  # w is 1-based
-        be = F.conv(F.substring(hx, (w - 1) * 8 + 1, F.lit(8)), 16, 10).cast("long")
-        return _let(
-            be,
-            lambda b: (
-                shr(b, 24)
-                + (shr(b, 16) % 256) * 256
-                + (shr(b, 8) % 256) * 65536
-                + (b % 256) * 16777216
-            ),
-        )
-
-    words = F.transform(
-        F.when(n_words > 0, F.sequence(F.lit(1), n_words)).otherwise(
-            F.array().cast("array<bigint>")
-        ),
-        le_word,
-    )
-
-    h0 = xor(F.lit(KAFKA_SEED).cast("long"), length.cast("long"))
-
-    def step(h: Column, k0: Column) -> Column:
-        k1 = _let(mul_m(k0), lambda k: mul_m(xor(k, shr(k, _R))))
-        return _let(k1, lambda k: xor(mul_m(h), k))
-
-    def tail(h: Column) -> Column:
-        # xor-ing 0 is the identity, so the rem<3 / rem<2 branches collapse
-        # into zero literals — h is referenced once, no tree duplication
-        hi = F.when(rem == 3, byte_at(n4 + 2) * 65536).otherwise(F.lit(0)) + F.when(
-            rem >= 2, byte_at(n4 + 1) * 256
-        ).otherwise(F.lit(0))
-        t = xor(h, hi)
-        return _let(t, lambda x: F.when(rem >= 1, mul_m(xor(x, byte_at(n4)))).otherwise(x))
-
-    def fmix(t: Column) -> Column:
-        u1 = _let(t, lambda x: mul_m(xor(x, shr(x, 13))))
-        u2 = _let(u1, lambda x: xor(x, shr(x, 15)))
-        # unsigned 32 → signed 32 (Java parity)
-        return _let(u2, lambda x: F.when(x >= (1 << 31), x - _M32).otherwise(x))
-
-    out = F.aggregate(words, h0, step, lambda h: fmix(tail(h)))
-    return F.when(c.isNotNull(), out)
-
-
-def kafka_partition_expr(
-    col: Column | str, num_partitions: int, impl: str = "jvm"
-) -> Column:
-    """Kafka default-partitioner target partition for a binary key column.
+def kafka_partition_expr(col: Column | str, num_partitions: int) -> Column:
+    """Kafka default-partitioner target partition for a binary key column,
+    ``(murmur2(key) & 0x7fffffff) % num_partitions`` on the numpy kernel.
 
     Null keys yield null (callers overlay round-robin for those — see
-    operators/repartition.py).
-
-    ``impl``: "pandas" (Arrow-batched numpy kernel — the THROUGHPUT path,
-    ~28× the fold at volume per SCALE.md; needs the package importable on
-    executors) or "jvm" (pure built-in expression fold, zero Python
-    dependency — the portability fallback).  Callers should normally go
-    through operators/repartition.py's ``impl="auto"``, which probes the
-    executors once per session and picks the kernel when it actually runs,
-    falling back to the fold otherwise.  Both are bit-identical to the
-    Kafka vectors (tests/test_murmur2.py).
+    operators/repartition.py).  Verified against the Kafka vectors
+    (tests/test_murmur2.py).
     """
-    h = murmur2_pandas_expr(col) if impl == "pandas" else murmur2_expr(col)
-    return F.when(
-        h.isNotNull(),
-        F.pmod(h.bitwiseAND(F.lit(0x7FFFFFFF)), F.lit(num_partitions)).cast(IntegerType()),
-    )
+    h = murmur2_pandas_expr(col)
+    return F.pmod(h.bitwiseAND(F.lit(0x7FFFFFFF)), F.lit(num_partitions)).cast(IntegerType())
 
 
 def _duck_byte(hx: str, i: str) -> str:
@@ -276,8 +169,8 @@ def _duck_byte(hx: str, i: str) -> str:
 
 def murmur2_duckdb_sql(col: str) -> str:
     """DuckDB SQL expression computing the same signed-32 murmur2 over a BLOB
-    column — the oracle twin of ``murmur2_expr`` (same hex-fold shape;
-    validated against the Kafka vectors in tests/test_murmur2.py)."""
+    column — the oracle twin of ``murmur2_pandas_expr`` (a hex-decoded word
+    fold; validated against the Kafka vectors in tests/test_murmur2.py)."""
     hx = f"upper(hex({col}))"
     length = f"octet_length({col})"
     nw = f"({length} // 4)"
@@ -303,8 +196,7 @@ def murmur2_duckdb_sql(col: str) -> str:
     # let-bind every stage via single-element list_transform (DuckDB's
     # lambda-binding idiom) so each stage evaluates ONCE per row.  Naive
     # textual substitution — each stage splicing its predecessor into both
-    # CASE branches — expands the whole word fold ~96× per row (the exact
-    # antipattern murmur2_expr's let-bound Spark fold avoids), and DuckDB
+    # CASE branches — expands the whole word fold ~96× per row, and DuckDB
     # does not CSE the copies: the oracle ran ~8× slower than this form.
     def let(val: str, template: str) -> str:
         # template refers to the bound value as `_v`

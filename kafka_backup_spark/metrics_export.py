@@ -3,12 +3,12 @@ registry names metrics/registry.rs:251-381).
 
 The reference serves a prometheus-client registry over hyper; here the
 registry is a tiny dict-of-series and the scrape surface is (a) a rendered
-text blob, (b) a node-exporter-style textfile, or (c) a one-shot stdlib HTTP
-server — all driver-side.  Metric VALUES come from Spark: the
-StreamingQueryListener history (streaming/metrics.py) and the lag/manifest
-aggregation DataFrames, which do the distributed work; the registry only
-holds the final scalars, so cardinality stays at partitions × metrics, never
-records.
+text blob, (b) a node-exporter-style textfile, or (c) a stdlib HTTP server
+(:class:`MetricsServer`) — all driver-side.  Metric VALUES come from Spark:
+the StreamingQueryListener history (streaming/metrics.py) and the
+lag/manifest aggregation DataFrames, which do the distributed work; the
+registry only holds the final scalars, so cardinality stays at partitions ×
+metrics, never records.
 
 Counter names follow prometheus-client encode semantics: a counter
 registered as ``kafka_backup_records`` is EXPOSED as
@@ -166,64 +166,13 @@ def registry_from_progress(
     return r
 
 
-def serve_once(
-    registry: MetricsRegistry, port: int = 0, n_requests: int = 1, health=None
-) -> int:
-    """One-shot scrape endpoint (server.rs:119-238): bind, serve /metrics
-    (and, with a :class:`~kafka_backup_spark.health.HealthCheck`, the
-    reference's ``/health`` JSON — server.rs:74,112) for ``n_requests``
-    GETs, shut down.  Returns the bound port (pass port=0 for an ephemeral
-    one — tests and smoke checks)."""
-    import http.server
-    import threading
-
-    body_ref = {"body": registry.render().encode()}
-
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def do_GET(self):  # noqa: N802 (stdlib API)
-            if health is not None and self.path == "/health":
-                body = health.to_json().encode()
-                # 200 healthy/degraded, 503 unhealthy (server.rs health_handler)
-                self.send_response(200 if health.is_operational() else 503)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-                return
-            if self.path not in ("/metrics", "/"):
-                self.send_response(404)
-                self.end_headers()
-                return
-            body = body_ref["body"]
-            self.send_response(200)
-            self.send_header(
-                "Content-Type", "text/plain; version=0.0.4; charset=utf-8"
-            )
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-        def log_message(self, *a):  # quiet
-            pass
-
-    server = http.server.HTTPServer(("127.0.0.1", port), Handler)
-    bound = server.server_address[1]
-
-    def _serve():
-        for _ in range(n_requests):
-            server.handle_request()
-        server.server_close()
-
-    threading.Thread(target=_serve, daemon=True).start()
-    return bound
-
-
 class MetricsServer:
     """Persistent exporter (commands/metrics_runtime.rs:8-56 +
-    metrics/server.rs run loop): serves ``/metrics`` and ``/health`` on a
-    daemon thread until :meth:`stop`.  Unlike :func:`serve_once`, every
-    scrape re-renders the registry, so a concurrently-updating run shows
-    live values.  ``stop(keep_alive_seconds=N)`` mirrors the reference's
+    metrics/server.rs:119-262 run loop): serves ``/metrics`` and, with a
+    :class:`~kafka_backup_spark.health.HealthCheck`, ``/health`` (200
+    healthy/degraded, 503 unhealthy) on a daemon thread until :meth:`stop`.
+    Every scrape re-renders the registry, so a concurrently-updating run
+    shows live values.  ``stop(keep_alive_seconds=N)`` mirrors the reference's
     ``shutdown_after_operation``: the endpoint stays scrapable N seconds
     after the operation finishes (a final Prometheus scrape window), then
     closes.  Driver-side only — metric VALUES still come from Spark jobs."""

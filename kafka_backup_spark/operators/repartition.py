@@ -6,7 +6,12 @@ column assignment plus the built-in shuffle:
 
 - murmur2 strategy: ``target_partition = (murmur2(key) & 0x7fffffff) % N``;
   empty (zero-byte) keys ARE hashed; null keys round-robin
-  (repartition.rs:36-75; empty-key test repartition.rs:499-506).
+  (repartition.rs:36-75; empty-key test repartition.rs:499-506).  The hash
+  runs on the Arrow-batched numpy kernel in Python workers, which import
+  this package: ``session.get_spark`` puts it on every executor's
+  PYTHONPATH, as the catalog UDFs, ``produce_capture`` and ``mock_kafka``
+  also require.  On a cluster whose executors cannot import it, a murmur2
+  restore fails with the worker's ImportError.
 - automatic strategy: round-robin everything.
 
 Round-robin is ``(source_partition + source_offset) mod N`` — offsets are
@@ -32,7 +37,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kafka_backup_spark import artifacts
 from kafka_backup_spark.functions.murmur2 import kafka_partition_expr
 
 
@@ -46,75 +50,26 @@ def _dispersed_expr(num_partitions: int) -> Column:
     return F.pmod(F.xxhash64("partition", "offset"), F.lit(num_partitions)).cast("int")
 
 
-def pandas_kernel_available(spark) -> bool:
-    """True when the Arrow-batched murmur2 kernel actually RUNS on this
-    session's executors — probed ONCE per session (an import check on the
-    driver can't see executor environments; the probe catches missing
-    numpy/pandas/pyarrow AND a missing package on the executor PYTHONPATH
-    in one shot).  The probe job is sized to ``defaultParallelism`` and
-    repartitioned so one task lands on every live task slot — a single-row
-    probe would only certify ONE executor and mis-select the kernel on a
-    heterogeneous cluster (ADVICE r6).  Any probe failure falls back to the
-    pure-JVM fold, so portability never regresses — SCALE.md measures the
-    kernel at ~28× the fold at volume, which is why it is worth one probe
-    job per session.
-
-    Caveat (documented, not detectable here): ``impl="auto"`` assumes the
-    executor environment stays homogeneous for the session.  With dynamic
-    allocation, executors added AFTER the probe are not certified; on
-    clusters where Python deps differ per node, pass ``impl="jvm"``
-    explicitly — the fold needs nothing but the JVM.  The result is a
-    session artifact of kind ``kernel-probe``."""
-
-    def probe() -> bool:
-        try:
-            dp = max(1, spark.sparkContext.defaultParallelism)
-            rows = (
-                spark.range(dp)
-                .repartition(dp)
-                .select(
-                    kafka_partition_expr(
-                        F.lit(b"probe"), 4, impl="pandas"
-                    ).alias("p")
-                )
-                .collect()
-            )
-            return len(rows) == dp and all(r["p"] is not None for r in rows)
-        except Exception:
-            return False
-
-    return artifacts.get_or_build(spark, "kernel-probe", "murmur2", probe)
-
-
 def assign_target_partitions(
     df: DataFrame,
     num_partitions: int,
     strategy: str = "murmur2",
     key_col: str = "key",
     out_col: str = "target_partition",
-    impl: str = "auto",
 ) -> DataFrame:
-    """``impl``: "auto" (default — Arrow-batched numpy kernel when the
-    one-per-session executor probe succeeds, else the JVM fold), "jvm"
-    (pure-expression fold — zero Python dependency, forced portability
-    path) or "pandas" (force the kernel — ~2× at sf0.1, ~28× at volume per
-    SCALE.md).  Bit-identical outputs across impls (hypothesis cross-impl
-    property + Kafka vectors)."""
     if strategy == "automatic":
         return df.withColumn(out_col, _round_robin_expr(num_partitions))
     if strategy == "dispersed":
         return df.withColumn(out_col, _dispersed_expr(num_partitions))
     if strategy != "murmur2":
         raise ValueError(f"unknown repartitioning strategy: {strategy}")
-    if impl == "auto":
-        impl = "pandas" if pandas_kernel_available(df.sparkSession) else "jvm"
-    hashed = kafka_partition_expr(F.col(key_col), num_partitions, impl=impl)
+    hashed = kafka_partition_expr(F.col(key_col), num_partitions)
     # null-key fallback costs nothing: coalesce of two narrow expressions
     return df.withColumn(out_col, F.coalesce(hashed, _round_robin_expr(num_partitions)))
 
 
 def repartition_records(
-    df: DataFrame, num_partitions: int, strategy: str = "murmur2", impl: str = "auto"
+    df: DataFrame, num_partitions: int, strategy: str = "murmur2"
 ) -> DataFrame:
     """Assign target partitions and physically co-locate rows by them.
 
@@ -122,7 +77,7 @@ def repartition_records(
     reference: Spark's shuffle provides the channels, backpressure and
     cancellation (SURVEY.md §2.10 R3).
     """
-    out = assign_target_partitions(df, num_partitions, strategy, impl=impl)
+    out = assign_target_partitions(df, num_partitions, strategy)
     return out.repartition(num_partitions, F.col("target_partition")).withColumn(
         "partition", F.col("target_partition")
     ).drop("target_partition")

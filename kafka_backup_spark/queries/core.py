@@ -741,18 +741,14 @@ FROM documents
 
 
 # ── R1: murmur2 repartition distribution ──────────────────────────────────
-# The Kafka-default-partitioner hash runs as a pure-JVM expression on the
-# Spark side and as the equivalent hex-fold SQL on DuckDB — both validated
-# against the published Kafka vectors (tests/test_murmur2.py).
+# The Kafka-default-partitioner hash runs on the Arrow-batched numpy kernel
+# on the Spark side and as the equivalent hex-fold SQL on DuckDB — both
+# validated against the published Kafka vectors (tests/test_murmur2.py).
 
 
 def q_murmur2_repartition(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = records_df(spark, sf_dir)
-    # Arrow-batched numpy kernel — the recommended hot-path impl at volume
-    # (SCALE.md: ~28× the interpreted JVM fold at 20M keys; bit-identical,
-    # hypothesis-cross-checked).  The zero-Python JVM fold remains the
-    # portability default elsewhere and keeps its own plan-purity test.
-    out = assign_target_partitions(r, 5, strategy="murmur2", impl="pandas")
+    out = assign_target_partitions(r, 5, strategy="murmur2")
     return out.groupBy("target_partition").agg(
         F.count(F.lit(1)).alias("n_records"),
         F.count_distinct("key").alias("n_keys"),

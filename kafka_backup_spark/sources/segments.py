@@ -131,6 +131,10 @@ def write_legacy_segments(root: str, records, gzip_partitions: frozenset = froze
     return n_files
 
 
+# a legacy topic directory's JSON segments, relative to the directory
+_LEGACY_SEGMENTS = "partition=*/segment-*.json*"
+
+
 def _glob(spark: SparkSession, pattern: str) -> list:
     """Hadoop glob, not python glob: works on any S6 backend URI.  Returns
     the matching FileStatus objects ([] when nothing matches)."""
@@ -226,9 +230,12 @@ class SegmentStore:
     def read(self, spark: SparkSession) -> DataFrame:
         """S5: segment source. Partition-column recovery of topic/partition is
         automatic; offset/timestamp predicates push down to row-group stats."""
+        return self._read_parquet(spark, self.topic_dirs(spark))
+
+    def _read_parquet(self, spark: SparkSession, dirs: list[str]) -> DataFrame:
         # basePath keeps partition-column recovery rooted; an empty store
         # still hands Spark the glob, so it fails exactly as before
-        dirs = self.topic_dirs(spark) or [f"{self.topics_path()}/topic=*"]
+        dirs = dirs or [f"{self.topics_path()}/topic=*"]
         df = spark.read.option("basePath", self.topics_path()).parquet(*dirs)
         return df.withColumn("partition", df["partition"].cast("int"))
 
@@ -237,17 +244,28 @@ class SegmentStore:
         segments living in the same store (the reference decides per segment
         by magic bytes, restore/helpers.rs:17-52; here format is carried by
         the file extension, so each side is a normal pruned scan and a
-        migration-era store restores without any conversion step)."""
-        has_legacy = bool(
-            _glob(spark, f"{self.topics_path()}/*/partition=*/segment-*.json")
-            or _glob(spark, f"{self.topics_path()}/*/partition=*/segment-*.json.gz")
-        )
-        has_parquet = bool(_glob(spark, f"{self.topics_path()}/topic=*/partition=*/*.parquet"))
-        if has_legacy and has_parquet:
-            return self.read(spark).unionByName(self.read_legacy(spark))
-        if has_legacy:
-            return self.read_legacy(spark)
-        return self.read(spark)
+        migration-era store restores without any conversion step).
+
+        One listing of ``topics/`` classifies its children: ``topic=``
+        directories are parquet topics, and any other directory not
+        starting with ``_`` or ``.`` is a legacy topic whose
+        ``partition=*/segment-*.json*`` files are listed for the JSON scan."""
+        topic_dirs, legacy_files = [], []
+        for st in _glob(spark, f"{self.topics_path()}/*"):
+            name = st.getPath().getName()
+            if not st.isDirectory() or name.startswith(("_", ".")):
+                continue
+            path = f"{self.topics_path()}/{name}"
+            if name.startswith("topic="):
+                topic_dirs.append(path)
+            else:
+                legacy_files += _glob(spark, f"{path}/{_LEGACY_SEGMENTS}")
+        if not legacy_files:
+            return self._read_parquet(spark, sorted(topic_dirs))
+        legacy = self._read_legacy(spark, [st.getPath().toString() for st in legacy_files])
+        if not topic_dirs:
+            return legacy
+        return self._read_parquet(spark, sorted(topic_dirs)).unionByName(legacy)
 
     def read_legacy(self, spark: SparkSession) -> DataFrame:
         """S5 dual format: legacy JSON segments → canonical record stream.
@@ -270,8 +288,12 @@ class SegmentStore:
         """
         # expanded here for the same reason as topic_dirs; no match still
         # hands Spark the glob, which fails as before
-        pattern = f"{self.topics_path()}/*/partition=*/segment-*.json*"
+        pattern = f"{self.topics_path()}/*/{_LEGACY_SEGMENTS}"
         paths = [st.getPath().toString() for st in _glob(spark, pattern)] or [pattern]
+        return self._read_legacy(spark, paths)
+
+    @staticmethod
+    def _read_legacy(spark: SparkSession, paths: list[str]) -> DataFrame:
         df = spark.read.schema(LEGACY_JSON_SCHEMA).json(paths)
         fn = F.input_file_name()
         return df.select(

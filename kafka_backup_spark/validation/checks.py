@@ -79,10 +79,17 @@ def consumer_group_check(group_offsets: DataFrame) -> DataFrame:
 
 def validation_summary(*check_results: DataFrame) -> DataFrame:
     """A7: counts by status; overall = failed if any failed, else warning if
-    any warned, else passed (validation/mod.rs:121-192)."""
+    any warned, else passed (validation/mod.rs:121-192).  Integrity-scan
+    statuses count too: a valid segment passed, a missing or corrupted one
+    failed."""
+    status = (
+        F.when(F.col("status") == "valid", F.lit("passed"))
+        .when(F.col("status").isin("missing", "corrupted"), F.lit("failed"))
+        .otherwise(F.col("status"))
+    )
     statuses = None
     for df in check_results:
-        s = df.select("status")
+        s = df.select(status.alias("status"))
         statuses = s if statuses is None else statuses.unionByName(s)
     assert statuses is not None
     counts = statuses.groupBy().agg(

@@ -21,7 +21,7 @@ import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SELF_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [

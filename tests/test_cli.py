@@ -8,6 +8,9 @@ import json
 import pytest
 
 from kafka_backup_spark.__main__ import main
+from kafka_backup_spark.engine import BackupEngine
+from kafka_backup_spark.manifest_store import ManifestStore
+from kafka_backup_spark.sources.segments import SegmentStore
 
 CFG = """
 mode: backup
@@ -189,6 +192,54 @@ def test_cli_validate_nondefault_span(spark, capsys, tmp_path, sf_dir):
     val = run(capsys, ["validate", "--store", store, "--backup-id", "bk-span"])
     assert val["summary"]["overall"] == "passed"
     assert all(s["status"] == "valid" for s in val["segments"])
+
+
+SPAN_CFG = "mode: backup\nbackup_id: {}\nbackup:\n  segment_span: 250\n"
+
+
+def test_cli_validate_and_evidence_fail_on_missing_segments(spark, capsys, tmp_path, sf_dir):
+    """A deleted partition directory fails validate (exit 1) and the
+    evidence report's validation verdict."""
+    import shutil
+
+    cfg = tmp_path / "span.yaml"
+    cfg.write_text(SPAN_CFG.format("bk-gone"))
+    store = str(tmp_path / "gone-store")
+    run(capsys, [
+        "backup", "--config", str(cfg), "--store", store,
+        "--source-parquet", f"{sf_dir}/events.parquet",
+    ])
+    shutil.rmtree(f"{store}/topics/topic=click/partition=0")
+    argv = ["--store", store, "--backup-id", "bk-gone"]
+    assert main(["validate", *argv]) == 1
+    val = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    missing = sum(s["status"] == "missing" for s in val["segments"])
+    assert missing > 0
+    assert val["summary"]["failed"] == missing
+    assert val["summary"]["passed"] == len(val["segments"]) - missing
+    assert val["summary"]["overall"] == "failed"
+    ev = run(capsys, ["evidence", *argv])
+    assert ev["report"]["validation"] == val["summary"]
+
+
+def test_cli_validate_and_evidence_take_the_config_span(spark, capsys, tmp_path, sf_dir):
+    """A manifest saved without its segment span is rescanned with the
+    --config span by both validate and evidence."""
+    from kafka_backup_spark.engine import BackupConfig
+    from kafka_backup_spark.schema import events_as_records, load_table
+
+    store = str(tmp_path / "lib-store")
+    records = events_as_records(load_table(spark, sf_dir, "events"))
+    m = BackupEngine(SegmentStore(store), BackupConfig(segment_span=250)).run(records)
+    assert "segment_span" not in ManifestStore(store, "bk-lib").save(m)
+    cfg = tmp_path / "span.yaml"
+    cfg.write_text(SPAN_CFG.format("bk-lib"))
+    argv = ["--config", str(cfg), "--store", store, "--backup-id", "bk-lib"]
+    val = run(capsys, ["validate", *argv])
+    assert val["summary"]["overall"] == "passed"
+    assert val["summary"]["passed"] == len(val["segments"]) > 0
+    ev = run(capsys, ["evidence", *argv])
+    assert ev["report"]["validation"] == val["summary"]
 
 
 def _parquet_scans(spark, path: str, run_cli):

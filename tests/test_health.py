@@ -104,24 +104,28 @@ def test_health_report_shape():
 
 
 def test_health_endpoint_status_codes():
-    from kafka_backup_spark.metrics_export import backup_registry, serve_once
+    from kafka_backup_spark.metrics_export import MetricsServer, backup_registry
 
     health = HealthCheck()
     health.register_component("kafka")
-    port = serve_once(backup_registry(), n_requests=2, health=health)
-    with urllib.request.urlopen(f"http://127.0.0.1:{port}/health", timeout=5) as resp:
-        assert resp.status == 200
-        doc = json.loads(resp.read())
-    assert doc["status"] == "healthy"
-    assert doc["components"][0]["name"] == "kafka"
-    # unhealthy -> 503 (server.rs:305-309)
-    health.mark_unhealthy("kafka", "Connection failed")
+    server = MetricsServer(backup_registry(), health=health)
+    port = server.start()
     try:
-        urllib.request.urlopen(f"http://127.0.0.1:{port}/health", timeout=5)
-        raise AssertionError("expected HTTP 503")
-    except urllib.error.HTTPError as e:
-        assert e.code == 503
-        assert json.loads(e.read())["status"] == "unhealthy"
+        with urllib.request.urlopen(f"http://127.0.0.1:{port}/health", timeout=5) as resp:
+            assert resp.status == 200
+            doc = json.loads(resp.read())
+        assert doc["status"] == "healthy"
+        assert doc["components"][0]["name"] == "kafka"
+        # unhealthy -> 503 (server.rs:305-309)
+        health.mark_unhealthy("kafka", "Connection failed")
+        try:
+            urllib.request.urlopen(f"http://127.0.0.1:{port}/health", timeout=5)
+            raise AssertionError("expected HTTP 503")
+        except urllib.error.HTTPError as e:
+            assert e.code == 503
+            assert json.loads(e.read())["status"] == "unhealthy"
+    finally:
+        server.stop()
 
 
 def test_observe_stream_progress(spark):

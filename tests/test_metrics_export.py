@@ -1,6 +1,6 @@
 """Prometheus exposition export (metrics/server.rs, registry.rs:251-381):
-name surface, counter `_total` encode semantics, textfile + one-shot HTTP
-scrape, and end-to-end values from a finished stream."""
+name surface, counter `_total` encode semantics, textfile + HTTP scrape,
+and end-to-end values from a finished stream."""
 
 from __future__ import annotations
 
@@ -12,9 +12,9 @@ from pyspark.sql import functions as F
 
 from kafka_backup_spark.metrics_export import (
     MetricsRegistry,
+    MetricsServer,
     backup_registry,
     registry_from_progress,
-    serve_once,
 )
 from kafka_backup_spark.streaming.metrics import PROGRESS_SCHEMA, ProgressMetrics
 
@@ -69,9 +69,13 @@ def test_textfile_and_http_scrape(tmp_path):
     content = open(path).read()
     assert "kafka_backup_records_total 42" in content
 
-    port = serve_once(r)
-    resp = urllib.request.urlopen(f"http://127.0.0.1:{port}/metrics", timeout=5)
-    body = resp.read().decode()
+    server = MetricsServer(r)
+    port = server.start()
+    try:
+        resp = urllib.request.urlopen(f"http://127.0.0.1:{port}/metrics", timeout=5)
+        body = resp.read().decode()
+    finally:
+        server.stop()
     assert resp.headers["Content-Type"].startswith("text/plain; version=0.0.4")
     assert "kafka_backup_records_total 42" in body
 

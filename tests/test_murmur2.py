@@ -16,6 +16,7 @@ from kafka_backup_spark.functions.murmur2 import (
     kafka_partition,
     kafka_partition_expr,
     murmur2,
+    murmur2_pandas_expr,
     to_positive,
 )
 
@@ -37,6 +38,17 @@ def test_seed_constant():
 @pytest.mark.parametrize("key,expected", list(KAFKA_VECTORS.items()))
 def test_known_vectors(key, expected):
     assert murmur2(key) == expected
+
+
+def test_known_vectors_through_executor_kernel(spark):
+    df = spark.createDataFrame([(k,) for k in KAFKA_VECTORS], "key binary")
+    rows = df.select(
+        "key",
+        murmur2_pandas_expr("key").alias("h"),
+        kafka_partition_expr("key", 7).alias("p"),
+    ).collect()
+    got = {bytes(r["key"]): (r["h"], r["p"]) for r in rows}
+    assert got == {k: (h, to_positive(h) % 7) for k, h in KAFKA_VECTORS.items()}
 
 
 def test_determinism_and_spread():

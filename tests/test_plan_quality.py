@@ -296,11 +296,8 @@ def test_repartition_plans_scale(spark, sf_dir):
     """R1/R2 must be pure projections + one hash shuffle, with no Exchange
     SinglePartition (the old row_number() window funneled every row through
     one task).  The catalog murmur2 entry runs the Arrow-batched numpy
-    kernel (the recommended hot-path impl) — Arrow-batched, never
-    row-at-a-time Python; round-robin stays Python-free entirely."""
-    from kafka_backup_spark.operators.repartition import assign_target_partitions
-    from kafka_backup_spark.queries.common import records_df
-
+    kernel — Arrow-batched, never row-at-a-time Python; round-robin stays
+    Python-free entirely."""
     qs = catalog.queries()
     for name in ("murmur2_repartition", "round_robin_repartition"):
         df = qs[name](spark, sf_dir)
@@ -310,12 +307,6 @@ def test_repartition_plans_scale(spark, sf_dir):
         assert "Window" not in plan, name
     rr = _plan(qs["round_robin_repartition"](spark, sf_dir))
     assert "ArrowEvalPython" not in rr
-    # the portability default (impl="jvm") stays a pure-expression fold:
-    # zero Python nodes of any kind in the plan
-    jvm = _plan(
-        assign_target_partitions(records_df(spark, sf_dir), 5, impl="jvm")
-    )
-    assert "ArrowEvalPython" not in jvm and "BatchEvalPython" not in jvm
 
 
 def test_dedup_exact_scans_cold_parquet_not_the_pin(spark, sf_dir):

@@ -48,53 +48,6 @@ def test_dispersed_is_deterministic_across_runs(spark):
     assert a == b
 
 
-def test_auto_impl_uses_kernel_when_probe_succeeds(spark):
-    """impl="auto" (the default) must resolve to the Arrow-batched numpy
-    kernel on executors where the package imports (this environment), and
-    the probe must run at most once per session."""
-    from kafka_backup_spark import artifacts
-
-    artifacts.release(spark, "kernel-probe")
-    df = spark.range(0, 10).select(
-        F.lit(0).alias("partition"),
-        F.col("id").alias("offset"),
-        F.col("id").cast("string").cast("binary").alias("key"),
-    )
-    out = assign_target_partitions(df, 4)  # impl defaults to "auto"
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan  # kernel path chosen
-    assert artifacts.entries(spark, "kernel-probe") == {"murmur2": True}
-    # second call: no new probe entry, same resolution
-    out2 = assign_target_partitions(df, 4)
-    assert "ArrowEvalPython" in out2._jdf.queryExecution().executedPlan().toString()
-    assert artifacts.entries(spark, "kernel-probe") == {"murmur2": True}
-
-
-def test_auto_impl_falls_back_to_jvm_on_probe_failure(spark):
-    """Portability: when the executor probe fails (package/numpy missing on
-    executors), impl="auto" must fall back to the pure-JVM fold — zero
-    Python nodes in the plan — and produce identical partitions."""
-    from kafka_backup_spark import artifacts
-
-    artifacts.release(spark, "kernel-probe")
-    artifacts.get_or_build(spark, "kernel-probe", "murmur2", lambda: False)  # a failed probe
-    try:
-        df = spark.range(0, 50).select(
-            F.lit(0).alias("partition"),
-            F.col("id").alias("offset"),
-            F.col("id").cast("string").cast("binary").alias("key"),
-        )
-        out = assign_target_partitions(df, 4)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-        jvm_rows = {r["offset"]: r["target_partition"] for r in out.collect()}
-    finally:
-        artifacts.release(spark, "kernel-probe")
-    forced = assign_target_partitions(df, 4, impl="pandas")
-    pandas_rows = {r["offset"]: r["target_partition"] for r in forced.collect()}
-    assert jvm_rows == pandas_rows  # bit-identical impls
-
-
 def test_murmur2_null_keys_fall_back_to_round_robin(spark):
     df = spark.range(0, 100).select(
         F.lit(0).alias("partition"),
@@ -107,3 +60,27 @@ def test_murmur2_null_keys_fall_back_to_round_robin(spark):
         for r in out.groupBy("target_partition").agg(F.count("*").alias("cnt")).collect()
     }
     assert set(dist) == set(range(4)) and all(v == 25 for v in dist.values())
+
+
+def test_murmur2_restore_plan_runs_no_extra_jobs(spark, sf_dir, tmp_path):
+    """Key routing is a column projection: building a restore plan with a
+    murmur2 repartition runs no more Spark jobs than building it without
+    one, even in a session whose artifacts were just released."""
+    from kafka_backup_spark import artifacts
+    from kafka_backup_spark.engine import RestoreConfig, RestoreEngine
+    from kafka_backup_spark.schema import events_as_records, load_table
+    from kafka_backup_spark.sources.segments import SegmentStore
+
+    store = SegmentStore(str(tmp_path / "store"))
+    store.write(events_as_records(load_table(spark, sf_dir, "events")))
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def plan_jobs(repartition_to):
+        artifacts.release(spark)
+        before = scheduler.nextJobId()
+        RestoreEngine(store, RestoreConfig(repartition_to=repartition_to)).plan(spark)
+        return scheduler.nextJobId() - before
+
+    # the repartitioned plan is built first, so any listing or schema cache
+    # the first build warms favours the plain one
+    assert plan_jobs(6) <= plan_jobs(None)

@@ -87,6 +87,19 @@ def test_integrity_scan(spark):
     assert got == {"k0": "valid", "k1": "corrupted", "k2": "missing", "k3": "valid"}
 
 
+def test_summary_counts_integrity_scan_statuses(spark):
+    """A missing or corrupted segment fails the summary; a valid one passes."""
+    observed = spark.createDataFrame(
+        [("k0", 100, 0, 99), ("k1", 90, 100, 199), ("k3", 0, 0, 0)],
+        "key string, record_count long, start_offset long, end_offset long",
+    )
+    summary = validation_summary(integrity_scan(_manifest(spark), observed)).collect()[0]
+    assert summary.asDict() == {
+        "total": 4, "passed": 2, "failed": 2, "errors": 0, "warnings": 0,
+        "overall": "failed",
+    }
+
+
 def test_integrity_scan_flags_null_observations_as_corrupted(spark):
     """A segment whose re-scan yields NULL offsets cannot be vouched for —
     it must report 'corrupted', not fall through NULL comparisons to
